@@ -63,14 +63,6 @@ def latest_by_key(df: DataFrame, key: str, ts_col: str, tiebreak: str) -> DataFr
     return df.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn")
 
 
-def doc_token_sets(documents: DataFrame, text_col: str = "text") -> DataFrame:
-    """Explode documents into distinct (doc_id, lang, tok) rows."""
-    return (
-        documents.select("doc_id", "lang", F.explode(tokens(text_col)).alias("tok"))
-        .distinct()
-    )
-
-
 def doc_token_arrays(documents: DataFrame, text_col: str = "text") -> DataFrame:
     """(doc_id, __toks) projection — the shared tokenization pass.
 

@@ -19,6 +19,7 @@ hash shuffle, no global ordering of the full table.
 
 from __future__ import annotations
 
+import logging
 import math
 
 from pyspark.sql import DataFrame, Window as W
@@ -48,7 +49,8 @@ def fan_out(df: DataFrame, *keys: str, min_tasks: int | None = None,
       partitions — deterministic placement, no sort-before-repartition
       pass; without keys it falls back to round-robin.
 
-    The target is `min(min_tasks or defaultParallelism,
+    The target is an explicit `min_tasks` as given (a floor: the size
+    cap never lowers it), else `min(defaultParallelism,
     ceil(input_bytes / bytes_per_task))` — SIZE-CAPPED (guide §2,
     r13): widening exists to break 1-task serialization, and its
     benefit saturates long before its per-task cost stops growing.
@@ -65,8 +67,8 @@ def fan_out(df: DataFrame, *keys: str, min_tasks: int | None = None,
     parallelism (and real tables arrive as many splits, so the whole
     call no-ops). Input bytes come from the optimizer's size estimate
     (`optimizedPlan().stats().sizeInBytes`) — already computed for
-    planning; on any stats failure the cap is skipped rather than
-    guessed.
+    planning; on a stats failure the cap is skipped rather than
+    guessed, with one logged warning.
 
     The explicit partition COUNT matters: AQE never coalesces a
     user-specified numPartitions, while a bare repartition(col) at this
@@ -80,16 +82,17 @@ def fan_out(df: DataFrame, *keys: str, min_tasks: int | None = None,
       per call — a fixed planning cost paid even when the result is a
       no-op. Call fan_out once per pipeline, on the scan side.
     """
-    spark = df.sparkSession
-    target = min_tasks or spark.sparkContext.defaultParallelism
-    if bytes_per_task:
+    target = min_tasks or df.sparkSession.sparkContext.defaultParallelism
+    if bytes_per_task and not min_tasks:
         try:
             size = int(str(
                 df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
             ))
             target = min(target, max(1, -(-size // bytes_per_task)))
-        except Exception:  # stats unavailable — widen uncapped
-            pass
+        except Exception as e:  # stats unavailable — widen uncapped
+            logging.getLogger(__name__).warning(
+                "fan_out: no size estimate (%s); widening to %d tasks "
+                "uncapped", e, target)
     if df.rdd.getNumPartitions() >= target:
         return df
     if keys:

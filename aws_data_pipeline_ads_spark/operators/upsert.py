@@ -21,6 +21,7 @@ the keyed snapshot transactionally (write-new-then-swap).
 
 from __future__ import annotations
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -57,14 +58,13 @@ def streaming_upsert_sink(stream_df: DataFrame, target_path: str,
     spark = stream_df.sparkSession
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
+        # ONLY a missing target means "first batch": any other read
+        # failure must fail the batch, not replace the whole snapshot
         try:
-            current = spark.read.parquet(target_path)
-            has_target = True
-        except Exception:
-            has_target = False
-        if has_target:
-            merged = merge_upsert(current, batch, key)
-        else:
+            merged = merge_upsert(spark.read.parquet(target_path), batch, key)
+        except AnalysisException as e:
+            if e.getCondition() != "PATH_NOT_FOUND":
+                raise
             merged = batch
         staged = f"{target_path}__staged_{batch_id}"
         merged.write.mode("overwrite").parquet(staged)

@@ -2,17 +2,23 @@
 
 Index construction is a WRITE-side job: a production deployment builds
 the BM25 postings / MinHash buckets / bloom words / ANN layouts once
-per corpus rebuild (tools/build_indexes.py) and every query serves from
-the materialized parquet. Query modules route their index needs through
-`index_path` so the amortization is uniform:
+per corpus rebuild and every query serves from the materialized
+parquet. Query modules route their index needs through `index_path`,
+so a query's own `build()` is the one declaration of the indexes it
+serves: calling it once, untimed, builds all of them.
 
 * Default: a per-process tmpdir memo — deterministic content, so
   memoizing is amortization, not semantics.
 * With `SPARK_GRAFT_IDX_ROOT` set: a deterministic on-disk location
   derived from (kind, sf_dir), built only if its completion marker is
   absent. This is how bench.py's per-query subprocess isolation shares
-  ONE set of indexes across child JVMs — the parent builds, children
-  serve — and mirrors how a real cluster shares indexes across jobs.
+  ONE set of indexes across child JVMs — the parent runs every benched
+  query's `build()` once, children serve — and mirrors how a real
+  cluster shares indexes across jobs.
+
+Every kind this process actually builds is appended to `BUILT` (a
+marker or memo hit records nothing); a timing harness clears it before
+its timed region and fails if anything was recorded inside it.
 
 The marker file is written only after `build` returns, so a crashed
 build is rebuilt rather than served half-written (builders write with
@@ -26,6 +32,7 @@ import re
 import tempfile
 
 _MEMO: dict[tuple[str, str], str] = {}
+BUILT: list[str] = []
 
 
 def _slug(sf_dir: str) -> str:
@@ -46,10 +53,12 @@ def index_path(kind: str, sf_dir: str, build) -> str:
         if not os.path.exists(marker):
             os.makedirs(path, exist_ok=True)
             build(path)
+            BUILT.append(kind)
             with open(marker, "w") as f:
                 f.write("ok\n")
     else:
         path = tempfile.mkdtemp(prefix=f"spark_{kind}_idx_")
         build(path)
+        BUILT.append(kind)
     _MEMO[key] = path
     return path

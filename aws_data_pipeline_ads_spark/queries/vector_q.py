@@ -460,18 +460,6 @@ def q_embedding_sq8(spark, sf_dir):
     return similarity.sq8_topk(load_table(spark, sf_dir, "embeddings"), _QV, 10)
 
 
-def warm_indexes(spark, sf_dir: str) -> None:
-    """Build the materialized ANN serving artifacts (LSH buckets, IVF
-    lists + centroids) for `sf_dir` if absent. Index construction is a
-    write-side job — callers that time query serving (bench.py) invoke
-    this first so one-time builds don't masquerade as query latency."""
-    _index_path(
-        "lsh", sf_dir,
-        lambda p: similarity.lsh_write(load_table(spark, sf_dir, "embeddings"), p),
-    )
-    _ivf_index(spark, sf_dir)
-
-
 _HARDNEG_ORACLE = (
     "WITH e AS (SELECT vec_id, label, CAST(embedding AS DOUBLE[]) AS emb "
     "FROM embeddings), "

@@ -208,12 +208,17 @@ def test_fan_out_size_cap(spark, sf_dir):
     assert wide.rdd.getNumPartitions() == max(
         par, docs.rdd.getNumPartitions())
 
-    # intermediate: the target is ceil(size/bytes_per_task), never more
+    # intermediate: the target is exactly min(par, ceil(size/bytes_per_task))
     half = -(-size // ((size // max(2, min(par, 4))) or 1))
     mid = fan_out(docs, "doc_id",
                   bytes_per_task=(size // max(2, min(par, 4))) or 1)
-    assert mid.rdd.getNumPartitions() <= max(
+    assert mid.rdd.getNumPartitions() == max(
         docs.rdd.getNumPartitions(), min(par, half))
+
+    # an explicit min_tasks is a floor the size cap never lowers
+    n = docs.rdd.getNumPartitions() + 2
+    floor = fan_out(docs, "doc_id", min_tasks=n, bytes_per_task=size + 1)
+    assert floor.rdd.getNumPartitions() == n
 
     # results are partitioning-invariant under the cap
     assert sorted(r.doc_id for r in capped.select("doc_id").collect()) == \

@@ -247,6 +247,28 @@ def test_streaming_upsert_maintains_keyed_snapshot(spark, sf_dir, tmp_path):
     assert spark.read.parquet(target).count() == snap1.count()
 
 
+def test_streaming_upsert_refuses_unreadable_target(spark, sf_dir, tmp_path):
+    """Only a MISSING target is a first batch: a target that exists but
+    is not parquet fails the micro-batch and is left as it was, instead
+    of being replaced by the batch alone."""
+    from pyspark.errors import StreamingQueryException
+
+    from aws_data_pipeline_ads_spark.operators.upsert import streaming_upsert_sink
+
+    target = tmp_path / "snapshot"
+    target.mkdir()
+    junk = target / "part-00000.parquet"
+    junk.write_bytes(b"not a parquet file\n")
+    ev = streaming.events_stream(spark, sf_dir).select(
+        "event_id", "event_type", "value"
+    )
+    with pytest.raises(StreamingQueryException):
+        streaming_upsert_sink(ev, str(target), str(tmp_path / "ck"),
+                              key="event_id")
+    assert [p.name for p in target.iterdir()] == [junk.name]
+    assert junk.read_bytes() == b"not a parquet file\n"
+
+
 def test_streaming_funnel_matches_batch(spark, sf_dir, ev_stream, tmp_path):
     """Streaming stateful funnel (applyInPandasWithState) drained in one
     AvailableNow batch == the oracle-checked batch funnel."""

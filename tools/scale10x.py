@@ -4,7 +4,8 @@ SCALE.md argues each heavy operator's plan shape survives a 100×
 scale-up; this tool converts the argument into measurement. It
 synthesizes a deterministic 10× corpus from sf0.1 (no RNG — per-copy
 token prefixing), runs the heaviest declared queries once per scale in
-one session (indexes prebuilt write-side, exactly like bench.py), and
+one session (each query's serving indexes built by an untimed build()
+at both scales before any timed rep, like bench.py), and
 writes SCALE10X.md with:
 
 * wall-clock at 1× and 10× and the growth factor (target ≲ linear —
@@ -112,16 +113,6 @@ def build_corpus(spark, base: str, out: str) -> None:
         dst = f"{out}/{t}.parquet"
         if os.path.exists(src) and not os.path.exists(dst):
             os.symlink(src, dst)
-
-
-def prebuild_indexes(spark, sf_dir: str) -> None:
-    from aws_data_pipeline_ads_spark.queries import text_q
-
-    text_q.bm25_index(spark, sf_dir)
-    text_q.minhash_index(spark, sf_dir)
-    text_q.simhash_index(spark, sf_dir)
-    text_q.bloom_index(spark, sf_dir)
-    text_q.unigram_vocab(spark, sf_dir)  # tokenizer training, write-side
 
 
 def run_once(df) -> float:
@@ -744,10 +735,6 @@ def main() -> None:
         build_corpus(spark, base, big)
         print(f"# 10x corpus built in {time.time()-t0:.1f}s at {big}",
               file=sys.stderr)
-    print("# prebuilding serving indexes (write-side, not timed)",
-          file=sys.stderr)
-    prebuild_indexes(spark, base)
-    prebuild_indexes(spark, big)
     # JIT ramp (same rationale as bench.py's warmup)
     run_once(REGISTRY["q_agg_rollup"].build(spark, base))
     run_once(REGISTRY["q_agg_rollup"].build(spark, base))
