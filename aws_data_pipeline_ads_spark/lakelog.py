@@ -358,7 +358,7 @@ class DataPlane:
     non-POSIX store (exists() constantly False would make restore
     refuse everything and vacuum delete nothing). Bulk reads/writes
     still travel through Spark's Hadoop FS (spark.read/df.write), and
-    footer-metadata collection (_collect_stats/_collect_row_counts)
+    footer-metadata collection (_collect_footer_stats)
     through pyarrow, which resolves object-store URIs via fsspec."""
 
     def exists(self, path: str) -> bool:
@@ -698,18 +698,27 @@ class LakeTable:
         every other stat."""
         return self._stat_key(self._probe_value(v))
 
-    def _collect_stats(self, files: list[str]) -> dict:
-        """Per-file min/max per top-level primitive column, read from
-        the parquet FOOTERS just written (metadata-only — no data
-        re-scan; the write-time cost Delta/Iceberg pay for the same
-        reason). Columns whose statistics are absent or non-primitive
-        are simply omitted — the scanner treats a missing stat as
-        'might match' (conservative, never wrong)."""
+    def _collect_footer_stats(self, files: list[str]) -> tuple[dict, dict]:
+        """(stats, row_counts) for `files`, read from the parquet
+        FOOTERS just written, one footer open per file (metadata-only —
+        no data re-scan; the write-time cost Delta/Iceberg pay for the
+        same reason).
+
+        stats: per-file min/max per top-level primitive column. Columns
+        whose statistics are absent or non-primitive are simply
+        omitted — the scanner treats a missing stat as 'might match'
+        (conservative, never wrong).
+
+        row_counts: per-file row counts, recorded in the entry so
+        COUNT(*) — the most common query there is — answers from the
+        log with ZERO file opens."""
         import pyarrow.parquet as pq
 
         out: dict[str, dict[str, list]] = {}
+        rows: dict[str, int] = {}
         for f in files:
             md = pq.ParquetFile(f).metadata
+            rows[f] = md.num_rows
             per_col: dict[str, list] = {}
             for rg in range(md.num_row_groups):
                 row_group = md.row_group(rg)
@@ -738,15 +747,7 @@ class LakeTable:
                         per_col[name] = [lo, hi]
             if per_col:
                 out[f] = per_col
-        return out
-
-    def _collect_row_counts(self, files: list[str]) -> dict:
-        """Per-file row counts from the footers just written (metadata
-        only). Recorded in the entry so COUNT(*) — the most common
-        query there is — answers from the log with ZERO file opens."""
-        import pyarrow.parquet as pq
-
-        return {f: pq.ParquetFile(f).metadata.num_rows for f in files}
+        return out, rows
 
     def _collect_sums(self, files: list[str], sum_cols: list[str],
                       prior: dict | None = None) -> dict:
@@ -1349,8 +1350,7 @@ class LakeTable:
                 map_sig = head_sig
                 # data files land ONCE; retries only re-publish metadata
                 new_files = self._write_files(df, cmap=eff_cmap)
-                new_stats = self._collect_stats(new_files)
-                new_rows = self._collect_row_counts(new_files)
+                new_stats, new_rows = self._collect_footer_stats(new_files)
             elif head_cons != validated_cons:
                 # a competitor published between attempts and the head
                 # now carries constraints this batch was never checked
@@ -1881,16 +1881,17 @@ class LakeTable:
         files = self._write_files(merged, cmap=self._entry_cmap(base_entry))
         bloom_cols = base_entry.get("bloom_cols")
         sum_cols = base_entry.get("sum_cols")
+        stats, rows = self._collect_footer_stats(files)
         return self._publish(files, "merge", txn_id, base + 1,
                              schema=merged.schema,
-                             stats=self._collect_stats(files),
+                             stats=stats,
                              blooms=(self._collect_blooms(files, bloom_cols)
                                      if bloom_cols else None),
                              bloom_cols=bloom_cols,
                              sums=(self._collect_sums(files, sum_cols)
                                    if sum_cols else None),
                              sum_cols=sum_cols,
-                             row_counts=self._collect_row_counts(files))
+                             row_counts=rows)
 
     _MERGE_COVER_MAX_KEYS = 100_000  # driver-side source-key cap
 
@@ -2311,10 +2312,11 @@ class LakeTable:
         untouched_set = set(untouched)
         stats = {f: s for f, s in entry.get("stats", {}).items()
                  if f in untouched_set}
-        stats.update(self._collect_stats(new_files))
         rows = {f: n for f, n in entry.get("row_counts", {}).items()
                 if f in untouched_set}
-        rows.update(self._collect_row_counts(new_files))
+        new_stats, new_rows = self._collect_footer_stats(new_files)
+        stats.update(new_stats)
+        rows.update(new_rows)
         if schema is None:
             schema = self._entry_schema(entry)
         else:
@@ -2494,10 +2496,9 @@ class LakeTable:
             self._enforce_write_gates(changed, entry, "update")
             new_files = self._write_files(changed, cmap=self._entry_cmap(entry))
         files = entry["files"] + new_files
-        stats = {**entry.get("stats", {}),
-                 **self._collect_stats(new_files)}
-        rows = {**entry.get("row_counts", {}),
-                **self._collect_row_counts(new_files)}
+        new_stats, new_rows = self._collect_footer_stats(new_files)
+        stats = {**entry.get("stats", {}), **new_stats}
+        rows = {**entry.get("row_counts", {}), **new_rows}
         bc = entry.get("bloom_cols")
         blooms = None
         if bc:
@@ -2666,9 +2667,10 @@ class LakeTable:
         files = self._write_files(compacted, cmap=self._entry_cmap(entry))
         bloom_cols = entry.get("bloom_cols")
         sum_cols = entry.get("sum_cols")
+        stats, rows = self._collect_footer_stats(files)
         return self._publish(files, "compact", None, base + 1,
                              schema=compacted.schema,
-                             stats=self._collect_stats(files),
+                             stats=stats,
                              blooms=(self._collect_blooms(files, bloom_cols)
                                      if bloom_cols else None),
                              bloom_cols=bloom_cols,
@@ -2677,7 +2679,7 @@ class LakeTable:
                              sums=(self._collect_sums(files, sum_cols)
                                    if sum_cols else None),
                              sum_cols=sum_cols,
-                             row_counts=self._collect_row_counts(files))
+                             row_counts=rows)
 
     def optimize_zorder(self, cols: list[str], n_files: int = 16,
                         bits: int = 10, curve: str = "morton") -> int:
@@ -2720,16 +2722,17 @@ class LakeTable:
             clustered, cmap=self._entry_cmap(base_entry))
         bloom_cols = base_entry.get("bloom_cols")
         sum_cols = base_entry.get("sum_cols")
+        stats, rows = self._collect_footer_stats(files)
         return self._publish(files, "zorder", None, base + 1,
                              schema=clustered.schema,
-                             stats=self._collect_stats(files),
+                             stats=stats,
                              blooms=(self._collect_blooms(files, bloom_cols)
                                      if bloom_cols else None),
                              bloom_cols=bloom_cols,
                              sums=(self._collect_sums(files, sum_cols)
                                    if sum_cols else None),
                              sum_cols=sum_cols,
-                             row_counts=self._collect_row_counts(files))
+                             row_counts=rows)
 
     def commit_audited(self, df: DataFrame, mode: str = "overwrite",
                        check=None, txn_id: str | None = None,
@@ -2862,8 +2865,8 @@ class LakeTable:
         consumer's last ACKNOWLEDGED version and the current head — or
         the FULL head as +1 rows on first call (initial load), or None
         when there is nothing new. `key` must be unique per snapshot
-        (NULL keys are routed around the diff, same contract as the
-        views).
+        (NULL-keyed rows never cancel: they come as unconditional ±
+        rows, same contract as the views).
 
         Offsets are stored as retention TAGS (`feed-<consumer>`), which
         buys the critical property for free: the files a consumer still
@@ -2874,7 +2877,7 @@ class LakeTable:
         idempotent, the standard CDC contract).
 
         Error semantics: the delta is LAZY, so the key-uniqueness
-        guard (which is fused into the delta plan — see
+        guard (part of the delta's one key window — see
         lakemv.signed_frame_delta) raises at ACTION time, not here,
         and surfaces as a generic Spark execution error whose message
         contains 'signed-delta key not unique'. Wrap the consuming

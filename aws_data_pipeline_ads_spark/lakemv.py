@@ -46,9 +46,9 @@ Scale shape:
   identical deferred-delete coverage) are never opened — a fixed-size
   append's refresh scans the appended files, not the table (measured
   in SCALE10X.md). What remains reduces to (key, group, measures, md5)
-  BEFORE its one full-outer join — the exchange carries narrow rows,
-  never document bodies; everything after the changed-key filter is
-  delta-sized.
+  and both sides, signed ±1, union into ONE key window (one exchange
+  of narrow rows, never document bodies) that cancels unchanged keys;
+  everything after it is delta-sized.
 * Refresh spans are COMPACTION-AWARE (signed_span_delta): signed
   deltas compose additively, so the span folds into per-segment diffs
   that skip row-preserving compaction commits entirely — an OPTIMIZE
@@ -69,6 +69,8 @@ q_lake_mv_refresh's oracle checks.
 """
 
 from __future__ import annotations
+
+import contextlib
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
@@ -97,12 +99,12 @@ class UnsupportedAggregateError(ValueError):
 
 class DuplicateKeyError(ValueError):
     """A snapshot side of a signed delta carries a duplicate non-NULL
-    key. The delta is a key-based full-outer join: duplicate keys
-    multiply rows through it and the ± pairs no longer cancel —
-    SILENT state corruption (counts can even stay right while sums
+    key. The delta pairs each key's one old row with its one new row:
+    a duplicate key leaves rows unpaired, so ± pairs no longer cancel
+    — SILENT state corruption (counts can even stay right while sums
     drift, the worst failure mode). Detected on the delta-sized pruned
-    sides at every refresh and refused loudly; fix the source's key
-    (or pre-deduplicate) and rebuild the view."""
+    sides at every refresh and refused loudly, naming the side; fix
+    the source's key (or pre-deduplicate) and rebuild the view."""
 
 
 class UnsupportedJoinShapeError(ValueError):
@@ -120,63 +122,35 @@ class UnsupportedJoinShapeError(ValueError):
 # -- version-delta primitives (shared by single-table and join views) --------
 
 # Marker embedded in the in-plan duplicate-key raise_error message so
-# action-site wrappers (_typed_dup_errors) can re-raise the typed
+# action-site wrappers (typed_dup_errors) can re-raise the typed
 # DuplicateKeyError. Contains "not unique" — the phrase the public
 # error contract (and its tests) match on.
 _DUP_MARKER = "signed-delta key not unique"
 
 
-def _typed_dup_errors(fn):
-    """Decorator for methods that EXECUTE a signed delta (refresh,
-    replication): the duplicate-key guard lives inside the delta plan
-    (one pass, no extra job — see signed_frame_delta), so it surfaces
-    as a generic Spark execution error; translate it back to the typed
-    DuplicateKeyError the API promises."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapper(*args, **kwargs):
-        try:
-            return fn(*args, **kwargs)
-        except DuplicateKeyError:
-            raise
-        except Exception as e:  # noqa: BLE001 — inspect and re-raise
-            msg = str(e)
-            i = msg.find(_DUP_MARKER)
-            if i >= 0:
-                raise DuplicateKeyError(
-                    msg[i:].split("\n", 1)[0]) from e
-            raise
-
-    return wrapper
-
-
+@contextlib.contextmanager
 def typed_dup_errors():
-    """Context manager translating the in-plan duplicate-key guard's
-    execution error into the typed DuplicateKeyError — for consumers
-    that ACTION a lazy signed delta themselves (feed_changes /
-    feed_changes_cdc deltas; the refresh() methods are already wrapped
-    via the _typed_dup_errors decorator):
+    """Translate the in-plan duplicate-key guard's execution error into
+    the typed DuplicateKeyError. The guard lives inside the delta plan
+    (one pass, no extra job — see signed_frame_delta), so it surfaces
+    as a generic Spark execution error. The refresh() methods use it
+    as a decorator (@typed_dup_errors()); consumers that ACTION a lazy
+    signed delta themselves (feed_changes / feed_changes_cdc deltas)
+    use it as a context manager:
 
         with typed_dup_errors():
             delta.collect()
     """
-    import contextlib
-
-    @contextlib.contextmanager
-    def _cm():
-        try:
-            yield
-        except DuplicateKeyError:
-            raise
-        except Exception as e:  # noqa: BLE001 — inspect and re-raise
-            msg = str(e)
-            i = msg.find(_DUP_MARKER)
-            if i >= 0:
-                raise DuplicateKeyError(msg[i:].split("\n", 1)[0]) from e
-            raise
-
-    return _cm()
+    try:
+        yield
+    except DuplicateKeyError:
+        raise
+    except Exception as e:  # noqa: BLE001 — inspect and re-raise
+        msg = str(e)
+        i = msg.find(_DUP_MARKER)
+        if i >= 0:
+            raise DuplicateKeyError(msg[i:].split("\n", 1)[0]) from e
+        raise
 
 
 def _file_pred_signatures(entry: dict) -> dict[str, tuple]:
@@ -216,11 +190,8 @@ def _version_delta_sides(source: LakeTable, v_old: int, v_new: int):
                 if sig_old[f] == sig_new[f]}
 
     def side(version: int, entry: dict) -> DataFrame:
-        files = [f for f in entry["files"] if f not in prunable]
-        if files:
-            return source.read_version_files(version, files)
-        return source.spark.createDataFrame(
-            [], source.read(version).schema)
+        return source.read_version_files(
+            version, [f for f in entry["files"] if f not in prunable])
 
     return side(v_old, e_old), side(v_new, e_new)
 
@@ -229,8 +200,11 @@ def signed_frame_delta(old_side: DataFrame, new_side: DataFrame,
                        key: str, cols: list[str]) -> DataFrame:
     """Signed row delta between two arbitrary snapshots sharing a
     per-snapshot-unique key: `cols` + __sign (+1 appeared / -1
-    disappeared). Unchanged keys (same key, same content hash over
-    `cols`) cancel out BEFORE any aggregation.
+    disappeared), in one pass. The sides, tagged -1 and +1, union into
+    one frame; one window over the key counts each side's rows and
+    brackets their content hashes. A key with exactly one old and one
+    new row under the same hash is unchanged, and both rows cancel;
+    every other row is kept with its sign.
 
     The content hash is the JSON encoding of a struct, not a
     separator-joined concat: concat_ws cannot distinguish NULL from ''
@@ -240,75 +214,58 @@ def signed_frame_delta(old_side: DataFrame, new_side: DataFrame,
     ignoreNullFields=false emits an explicit null, so the encoding is
     injective on the row.
 
-    NULL keys: a NULL-keyed row has no cross-snapshot identity (a key
-    equality join would silently drop it from BOTH changed sides — the
-    row would be invisible to every refresh while the first full build
-    counts it). Such rows are routed AROUND the key-diff instead: the
-    old side emits -1 and the new side +1 unconditionally, so an
-    unchanged NULL-keyed row contributes a cancelling ± pair to the
-    group aggregate and a changed/appeared/disappeared one contributes
-    exactly its net effect. No uniqueness is required of NULL keys."""
-    reserved = {"__k", "__h", "__sign", "__c"} & set(cols) | (
-        {"__k", "__h", "__sign", "__c"} & {key})
+    Duplicate keys: a non-NULL key with two rows on one side cannot be
+    paired, and the view state would drift SILENTLY (sums drift while
+    counts can still cancel). The same window counts the rows, so the
+    guard raises inside the delta plan, with no extra job, naming the
+    side. Action sites that promise the typed DuplicateKeyError wrap
+    themselves with typed_dup_errors.
+
+    NULL keys: a NULL-keyed row has no cross-snapshot identity, so it
+    never cancels: the old side emits -1 and the new side +1
+    unconditionally. An unchanged NULL-keyed row contributes a
+    cancelling ± pair to the group aggregate and a changed, appeared
+    or disappeared one exactly its net effect. No uniqueness is
+    required of NULL keys; the window also partitions them by content
+    hash, so they do not all land in one task."""
+    internal = {"__k", "__h", "__sign", "__no", "__nn", "__lo", "__hi"}
+    reserved = internal & (set(cols) | {key})
     if reserved:
         raise ValueError(
             f"signed delta: column name(s) {sorted(reserved)} collide "
-            f"with the delta's internal columns (__k/__h/__sign/__c) — "
+            f"with the delta's internal columns {sorted(internal)} — "
             f"rename the source column(s)")
     content = F.md5(F.to_json(F.struct(*[F.col(c) for c in cols]),
                               {"ignoreNullFields": "false"}))
-    old = old_side.select(
-        F.col(key).alias("__k"), *cols, content.alias("__h"))
-    new = new_side.select(
-        F.col(key).alias("__k"), *cols, content.alias("__h"))
-    null_minus = old.where(F.col("__k").isNull()).select(
-        *cols, F.lit(-1).alias("__sign"))
-    null_plus = new.where(F.col("__k").isNull()).select(
-        *cols, F.lit(1).alias("__sign"))
-    # LOUD duplicate-key guard, fused INTO the delta plan: a duplicate
-    # key would multiply rows through the full-outer join below and
-    # corrupt the signed state SILENTLY (sums drift while counts can
-    # still cancel). The guard is a per-side window count over the
-    # join key — the window's hash partitioning and sort are exactly
-    # the join's own requirements, so the check costs ZERO extra
-    # passes/exchanges (it used to be an eager collect: a whole extra
-    # delta-sized job per delta, ~0.7 s locally and a doubled delta
-    # read at scale — guide §1.2/§2.4). It raises DURING delta
-    # execution; action sites that promise the typed DuplicateKeyError
-    # wrap themselves with _typed_dup_errors.
-    def guard(side: DataFrame, side_name: str) -> DataFrame:
-        c = F.count(F.lit(1)).over(
-            W.partitionBy("__k").rowsBetween(
-                W.unboundedPreceding, W.unboundedFollowing))
-        msg = F.concat(
+    k, sign = F.col("__k"), F.col("__sign")
+    both = old_side.select(
+        F.col(key).alias("__k"), *cols, content.alias("__h"),
+        F.lit(-1).alias("__sign")).unionByName(new_side.select(
+            F.col(key).alias("__k"), *cols, content.alias("__h"),
+            F.lit(1).alias("__sign")))
+    w = W.partitionBy(k, F.when(k.isNull(), F.col("__h")))
+    counted = both.select(
+        "*", F.count(F.when(sign < 0, 1)).over(w).alias("__no"),
+        F.count(F.when(sign > 0, 1)).over(w).alias("__nn"),
+        F.min("__h").over(w).alias("__lo"),
+        F.max("__h").over(w).alias("__hi"))
+
+    def dup(side_name: str, n: str):
+        return F.raise_error(F.concat(
             F.lit(f"{_DUP_MARKER}: delta key {key!r} is not unique on "
                   f"the {side_name} side: value "),
-            F.col("__k").cast("string"),
-            F.lit(" occurs "), F.col("__c").cast("string"),
-            F.lit(" times — the signed delta would multiply rows "
-                  "through its key join and corrupt the view state; "
-                  "use a key that is unique per snapshot (NULL keys "
-                  "are exempt) or pre-deduplicate the source"))
-        return (side.withColumn("__c", c)
-                .where(F.when(F.col("__c") > 1, F.raise_error(msg))
-                       .otherwise(F.lit(True)))
-                .drop("__c"))
+            k.cast("string"), F.lit(" occurs "), F.col(n).cast("string"),
+            F.lit(" times — the signed delta cannot pair its rows and "
+                  "would corrupt the view state; use a key that is "
+                  "unique per snapshot (NULL keys are exempt) or "
+                  "pre-deduplicate the source")))
 
-    o = guard(old.where(F.col("__k").isNotNull()), "old").alias("o")
-    n = guard(new.where(F.col("__k").isNotNull()), "new").alias("n")
-    j = o.join(n, F.col("o.__k") == F.col("n.__k"), "full_outer")
-    changed_old = F.col("o.__k").isNotNull() & (
-        F.col("n.__k").isNull() | (F.col("o.__h") != F.col("n.__h")))
-    changed_new = F.col("n.__k").isNotNull() & (
-        F.col("o.__k").isNull() | (F.col("o.__h") != F.col("n.__h")))
-    minus = j.where(changed_old).select(
-        *[F.col(f"o.{c}").alias(c) for c in cols],
-        F.lit(-1).alias("__sign"))
-    plus = j.where(changed_new).select(
-        *[F.col(f"n.{c}").alias(c) for c in cols],
-        F.lit(1).alias("__sign"))
-    return (minus.unionByName(plus)
-            .unionByName(null_minus).unionByName(null_plus))
+    keep = (F.when(k.isNull(), F.lit(True))
+            .when(F.col("__no") > 1, dup("old", "__no"))
+            .when(F.col("__nn") > 1, dup("new", "__nn"))
+            .otherwise((F.col("__no") + F.col("__nn") < 2)
+                       | (F.col("__lo") != F.col("__hi"))))
+    return counted.where(keep).select(*cols, "__sign")
 
 
 def signed_version_delta(source: LakeTable, key: str, cols: list[str],
@@ -317,7 +274,7 @@ def signed_version_delta(source: LakeTable, key: str, cols: list[str],
     """Signed row delta between two versions of `source`: `cols` +
     __sign (+1 appeared / -1 disappeared). File-level pruning first
     (_version_delta_sides), then the key-diff (signed_frame_delta —
-    unchanged keys cancel, NULL keys routed around the join). File
+    unchanged keys cancel, NULL keys never do). File
     pruning stays sound for NULL-keyed rows because a row never leaves
     its file without a rewrite: a NULL row held only in files both
     versions share is identical on both sides and prunes with them.
@@ -642,12 +599,12 @@ class LakeMaterializedView:
                  derive: dict[str, str] | None = None,
                  state_key: bool = False):
         # `key` must be unique per source snapshot (the table's primary
-        # key — the same contract LakeTable.merge holds): the delta is
-        # a key-based full-outer join, and duplicate keys would
-        # multiply rows through it, corrupting the signed counts.
+        # key — the same contract LakeTable.merge holds): the delta
+        # cancels a key's old and new row only when each side holds
+        # exactly one, and refuses a duplicate key loudly.
         # NULL keys are the one sanctioned exception: they carry no
-        # cross-version identity, so the delta routes them around the
-        # join as unconditional ± rows (signed_frame_delta) — any
+        # cross-version identity, so the delta never cancels them and
+        # emits unconditional ± rows (signed_frame_delta) — any
         # number of NULL-keyed rows is maintained correctly.
         if not group_cols:
             raise ValueError("materialized view needs >=1 group column")
@@ -845,7 +802,7 @@ class LakeMaterializedView:
 
     # -- refresh -------------------------------------------------------------
 
-    @_typed_dup_errors
+    @typed_dup_errors()
     def refresh(self) -> int:
         """Bring the view up to the source head. First call builds the
         full aggregate; later calls apply only the signed delta since
@@ -884,12 +841,13 @@ class LakeMaterializedView:
             # subtracted from a bottom-k state. Refuse loudly (the
             # delta-sized check is one narrow action), never over-count.
             # The check is NET per identical row content, not raw-sign
-            # existence: NULL-keyed rows are routed around the key diff
-            # as unconditional ± pairs every span (signed_frame_delta),
-            # so an UNCHANGED NULL-keyed row carries a cancelling pair —
-            # net 0, harmless (± cancels in every signed aggregate and
-            # re-inserting a value already in a bottom-k sketch is a
-            # no-op). Only a net-negative content group is a true
+            # existence: NULL-keyed rows never cancel in the key diff
+            # and come as unconditional ± pairs every span
+            # (signed_frame_delta), so an UNCHANGED NULL-keyed row
+            # carries a cancelling pair — net 0, harmless (± cancels
+            # in every signed aggregate and re-inserting a value
+            # already in a bottom-k sketch is a no-op). Only a
+            # net-negative content group is a true
             # disappearance a sketch cannot retract.
             neg = (delta.groupBy(*self._delta_cols())
                    .agg(F.sum("__sign").alias("__net"))
@@ -925,7 +883,7 @@ class LakeMaterializedView:
         FILE-pruned first, then ROW-pruned.
 
         File pruning: the commit log records per-file min/max stats
-        per column (lakelog._collect_stats). A file whose stat box on
+        per column (lakelog._collect_footer_stats). A file whose stat box on
         the group columns cannot hold ANY touched group value provably
         contributes no touched-group row and is never opened. The
         touched set is collected driver-side (group-cardinality-sized
@@ -945,9 +903,6 @@ class LakeMaterializedView:
         else:
             files = self.source._read_entry(head)["files"]
         self.last_recompute_files = list(files)
-        if not files:
-            return self._derived(self.spark.createDataFrame(
-                [], self.source.read(head).schema))
         return self._derived(
             self.source.read_version_files(head, files))
 
@@ -1323,7 +1278,7 @@ class LakeJoinMaterializedView:
     _FACT_DELTA_HOW = {"inner": "inner", "left": "left",
                        "right": "inner", "full": "left"}
 
-    @_typed_dup_errors
+    @typed_dup_errors()
     def refresh(self) -> tuple[int, int]:
         """Bring the view up to both source heads. First call builds
         the full join aggregate; later calls apply the signed join
@@ -1821,7 +1776,7 @@ class LakeStarMaterializedView:
 
     # -- refresh -----------------------------------------------------------------
 
-    @_typed_dup_errors
+    @typed_dup_errors()
     def refresh(self) -> tuple[int, ...]:
         """Bring the view up to every source head. First call builds
         the full star aggregate (after many-to-one checks on every

@@ -13,6 +13,7 @@ from __future__ import annotations
 
 import math
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -1018,12 +1019,16 @@ def ivfpq_write(embeddings: DataFrame, centroids: list[list[float]],
 
 
 def _ivfpq_is_residual(spark, path: str) -> bool:
-    """Pre-meta indexes (raw codes) have no meta table."""
+    """Pre-meta indexes (raw codes) have no meta table. Only a MISSING
+    meta means raw codes: any other read failure raises, or a residual
+    index would be scored as raw codes and rank silently wrong."""
     try:
-        return bool(spark.read.parquet(f"{path}/meta")
-                    .collect()[0]["residual"])
-    except Exception:
+        meta = spark.read.parquet(f"{path}/meta")
+    except AnalysisException as e:
+        if e.getCondition() != "PATH_NOT_FOUND":
+            raise
         return False
+    return bool(meta.collect()[0]["residual"])
 
 
 def ivfpq_topk(spark, path: str, embeddings: DataFrame, qv: list[float],

@@ -3436,9 +3436,10 @@ def lakemv_index(spark, sf_dir: str) -> str:
         "count/sum view over the documents lake kept current through "
         "full build → append → CoW delete purely by signed-delta "
         "application (counting algorithm: each side of the version "
-        "diff reduces to key+group+measure+md5 before its one "
-        "full-outer join; everything after the changed-key filter is "
-        "delta-sized, the state is one row per group). Hash-matching "
+        "diff reduces to key+group+measure+md5, and the signed sides "
+        "union into one key window that cancels unchanged keys; "
+        "everything after it is delta-sized, the state is one row per "
+        "group). Hash-matching "
         "the flat GROUP BY twin over the final predicate proves the "
         "incremental state equals a full recompute, decimal sums "
         "included. The Delta-Live-Tables-shaped refresh a 100 TB "
@@ -3697,7 +3698,7 @@ def lakemv_star_index(spark, sf_dir: str) -> str:
 
         # (l_orderkey, l_linenumber) is NOT unique in the synthetic
         # corpus (multiplicity up to 6) — the fact key contract demands
-        # per-snapshot uniqueness (the delta's key join refuses
+        # per-snapshot uniqueness (the delta's key window refuses
         # duplicates loudly, lakemv.DuplicateKeyError), so disambiguate
         # with a deterministic per-duplicate ordinal. Ties on the full
         # projected row are content-identical, so the keyed multiset is

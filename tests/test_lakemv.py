@@ -913,9 +913,9 @@ def test_recompute_unclustered_source_keeps_all_files(
 
 def test_null_keyed_rows_are_maintained(spark, tmp_path):
     """A NULL-keyed source row has no cross-version identity; the
-    delta routes it AROUND the key-diff as unconditional ± rows
+    delta never cancels it and emits it as unconditional ± rows
     (signed_frame_delta) instead of silently dropping it from both
-    changed sides. Appear / disappear / unchanged must all reconcile
+    sides. Appear / disappear / unchanged must all reconcile
     with a full recompute."""
     t = LakeTable(spark, str(tmp_path / "src"))
     t.commit(spark.createDataFrame(
@@ -972,7 +972,7 @@ def star_srcs(spark, sf_dir, tmp_path):
     from pyspark.sql import Window
 
     # (l_orderkey, l_linenumber) is NOT unique in the synthetic corpus
-    # — disambiguate with a deterministic ordinal (the delta's key join
+    # — disambiguate with a deterministic ordinal (the delta's key window
     # refuses duplicate keys loudly; see test_duplicate_fact_key_refused)
     rn = F.row_number().over(
         Window.partitionBy("l_orderkey", "l_linenumber")
@@ -1323,11 +1323,11 @@ def test_lake_mv_sink_star_fact_stream(spark, sf_dir, tmp_path):
 
 
 def test_signed_frame_delta_dup_guard_in_plan(spark):
-    """r12: the duplicate-key guard is fused INTO the delta plan (a
-    window count sharing the key join's exchange/sort) instead of an
-    eager pre-collect — zero extra jobs per delta. Pin both halves:
-    unique keys flow through silently; a duplicate key raises ON
-    MATERIALIZATION with the loud marker message."""
+    """The duplicate-key guard is part of the delta plan (the same key
+    window that pairs the rows counts them), not an eager pre-collect —
+    zero extra jobs per delta. Unique keys flow through silently; a
+    duplicate key on either side raises ON MATERIALIZATION with the
+    loud marker message, naming the side."""
     from aws_data_pipeline_ads_spark.lakemv import signed_frame_delta
 
     old = spark.createDataFrame(
@@ -1339,17 +1339,107 @@ def test_signed_frame_delta_dup_guard_in_plan(spark):
     got = {(r["k"], r["v"], r["__sign"]) for r in d.collect()}
     assert got == {(2, "b", -1), (2, "B", 1), (3, "c", 1)}
 
-    dup_new = spark.createDataFrame(
+    dup = spark.createDataFrame(
         [Row(k=1, v="a"), Row(k=1, v="x")], "k long, v string")
-    bad = signed_frame_delta(old, dup_new, "k", ["k", "v"])
-    with pytest.raises(Exception, match="not unique"):
-        bad.collect()
+    with pytest.raises(Exception, match="not unique on the new side"):
+        signed_frame_delta(old, dup, "k", ["k", "v"]).collect()
+    with pytest.raises(Exception, match="not unique on the old side"):
+        signed_frame_delta(dup, new, "k", ["k", "v"]).collect()
+
+
+def _signed_diff_model(old, new):
+    """Pure-Python signed diff: a non-NULL key whose row is equal on
+    both sides cancels; every other row carries its sign; NULL-keyed
+    rows never cancel."""
+    from collections import Counter
+
+    out = Counter()
+    o = {r[0]: r for r in old if r[0] is not None}
+    n = {r[0]: r for r in new if r[0] is not None}
+    for k in o.keys() | n.keys():
+        if o.get(k) != n.get(k):
+            out.update([o[k] + (-1,)] if k in o else [])
+            out.update([n[k] + (1,)] if k in n else [])
+    out.update(r + (-1,) for r in old if r[0] is None)
+    out.update(r + (1,) for r in new if r[0] is None)
+    return out
+
+
+@pytest.mark.parametrize("seed", [0, 1, 2])
+def test_signed_frame_delta_matches_python_model(spark, seed):
+    """Two arms, one answer: signed_frame_delta on random snapshot
+    pairs equals the pure-Python signed diff as a multiset. The pairs
+    hold unchanged, changed, appeared and disappeared keys, NULL-keyed
+    rows (some identical on both sides, some repeated on one side) and
+    NULL values, including a NULL↔'' flip."""
+    import random
+    from collections import Counter
+
+    from aws_data_pipeline_ads_spark.lakemv import signed_frame_delta
+
+    rng = random.Random(seed)
+    vals = [None, "", "a", "b"]
+    old = [(k, rng.choice(vals), rng.choice([None, 1, 2]))
+           for k in range(40)]
+    new = []
+    for k, v, x in old:
+        fate = rng.random()
+        if fate < 0.4:
+            new.append((k, v, x))                          # unchanged
+        elif fate < 0.55:
+            new.append((k, "" if v is None else None, x))  # NULL↔'' etc.
+        elif fate < 0.7:
+            new.append((k, v, None if x is not None else 3))
+        # else: disappeared
+    new += [(k, rng.choice(vals), rng.choice([None, 5]))   # appeared
+            for k in range(40, 40 + rng.randint(1, 10))]
+    nulls = [(None, rng.choice(vals), rng.choice([None, 7]))
+             for _ in range(4)]
+    old += nulls[:3] + nulls[:1]
+    new += nulls[1:]
+    rng.shuffle(new)
+    schema = "k long, v string, x long"
+    d = signed_frame_delta(spark.createDataFrame(old, schema),
+                           spark.createDataFrame(new, schema),
+                           "k", ["k", "v", "x"])
+    got = Counter(tuple(r) for r in d.collect())
+    assert got == _signed_diff_model(old, new)
+
+
+def test_signed_version_delta_append_plan_is_one_pass(spark, tmp_path):
+    """An append's delta scans the appended file once (the old side is
+    empty after file pruning) and shuffles once, hash-partitioned on
+    the key, with no join."""
+    from aws_data_pipeline_ads_spark import plans
+    from aws_data_pipeline_ads_spark.lakemv import signed_version_delta
+
+    t = LakeTable(spark, str(tmp_path / "src"))
+    schema = "doc_id long, lang string, n_chars long"
+    t.commit(spark.createDataFrame(
+        [Row(doc_id=i, lang="aa", n_chars=i) for i in range(20)],
+        schema).repartition(2))
+    t.commit(spark.createDataFrame(
+        [Row(doc_id=i, lang="bb", n_chars=i) for i in range(20, 30)],
+        schema).coalesce(1), "append")
+    (appended,) = set(t._read_entry(1)["files"]) - set(
+        t._read_entry(0)["files"])
+    d = signed_version_delta(t, "doc_id", ["doc_id", "lang", "n_chars"],
+                             0, 1)
+    plan = plans.physical_plan(d)
+    assert plan.count("FileScan") == 1
+    assert [f.split("/")[-1] for f in d.inputFiles()] == [
+        appended.split("/")[-1]]
+    assert "Join" not in plan
+    assert plans.count_shuffle_exchanges(d) == 1
+    assert plan.count("Exchange hashpartitioning(__k") == 1
+    assert sorted((r["doc_id"], r["__sign"]) for r in d.collect()) == [
+        (i, 1) for i in range(20, 30)]
 
 
 def test_duplicate_fact_key_refused(spark, tmp_path):
     """The key contract is GUARDED, not just documented: a duplicate
-    non-NULL key on either delta side would multiply rows through the
-    key join and corrupt sums while counts still cancel — the worst
+    non-NULL key on either delta side would leave its rows unpaired in
+    the key diff and corrupt sums while counts still cancel — the worst
     silent failure. The refresh must refuse loudly instead. (Found the
     hard way: (l_orderkey, l_linenumber) is not unique in the
     synthetic lineitem; an update-delta over that key silently lost
@@ -1969,7 +2059,7 @@ def test_kmv_refuses_revisions(spark, tmp_path):
 
 
 def test_kmv_null_key_rows_do_not_wedge_growing_source(spark, tmp_path):
-    """NULL-keyed source rows are routed around the key diff as
+    """NULL-keyed source rows never cancel in the key diff and come as
     unconditional ± pairs (signed_frame_delta) — so whenever their file
     is on both diff sides (snapshot-style overwrite producers, CoW
     rewrites of neighboring rows), an UNCHANGED NULL-keyed row used to

@@ -684,6 +684,25 @@ def test_ivfpq_index_prunes_and_degenerates_to_pq(spark, sf_dir, tmp_path):
     assert recall >= 0.5
 
 
+def test_ivfpq_layout_probe_refuses_unreadable_meta(spark, tmp_path):
+    """Only a MISSING meta table means the raw-codes layout; an
+    unreadable one raises instead of silently scoring a residual
+    index as raw codes."""
+    from aws_data_pipeline_ads_spark.operators import similarity
+
+    assert similarity._ivfpq_is_residual(spark, str(tmp_path / "old")) \
+        is False
+    spark.createDataFrame([(True,)], "residual boolean").write.parquet(
+        str(tmp_path / "res" / "meta"))
+    assert similarity._ivfpq_is_residual(spark, str(tmp_path / "res"))
+    bad = tmp_path / "bad" / "meta"
+    bad.mkdir(parents=True)
+    (bad / "part-00000.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception) as exc:
+        similarity._ivfpq_is_residual(spark, str(tmp_path / "bad"))
+    assert "PATH_NOT_FOUND" not in str(exc.value)
+
+
 def test_ivfpq_residual_encoding(spark, sf_dir, tmp_path):
     """The IVFADC residual layout (codes of û − c[list], r11):
 

@@ -28,8 +28,8 @@ import os
 
 # Override with SPARK_GRAFT_TAIL_SF=/root/testdata/sf0.1 for a
 # full-scale rotation pass (slower; the per-round artifact sweep in
-# tools/check_oracle.py covers ALL queries at sf0.1 — see
-# ORACLE_SF01_r5.txt).
+# tools/check_oracle.py covers ALL queries at sf0.1 — the latest
+# committed sweep is ORACLE_SF01_r13.txt).
 SF01 = os.environ.get("SPARK_GRAFT_TAIL_SF", "/root/testdata/sf0.01")
 SAMPLE = 12
 

@@ -59,14 +59,10 @@ def main() -> None:
         f"\n{len(rows)} queries, {total_shuffles} shuffle exchanges total, "
         f"{sum(1 for r in rows if r[2])} broadcast joins, "
         f"{sum(1 for r in rows if r[3])} pushed-filter scans.\n"
-        "\nNote — signed-delta duplicate-key guard at scale: the counts "
-        "above include the guard's per-side window exchanges in the "
-        "BROADCAST regime (small deltas), where they are extra. In the "
-        "large-delta regime the key join plans as SortMergeJoin and the "
-        "guard windows SHARE its per-side hash partitioning and sort — "
-        "zero extra exchanges, plan-proven in "
-        "plans/r13/dupguard_smj_{guarded,unguarded}.txt (4 exchanges / "
-        "6 sorts in BOTH, 2M-row parquet-backed sides).\n"
+        "\nNote — signed deltas (lake change feeds, view refreshes) "
+        "plan as one key window over the signed union of both sides, "
+        "which also holds the duplicate-key guard: one hash exchange "
+        "per delta at any delta size, and no join.\n"
     )
     path = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
                         "PLANS.md")
