@@ -749,57 +749,86 @@ class LakeTable:
                 out[f] = per_col
         return out, rows
 
-    def _collect_sums(self, files: list[str], sum_cols: list[str],
-                      prior: dict | None = None) -> dict:
+    def _index_files(self, files: list[str],
+                     bloom_cols: list[str] | None = None,
+                     sum_cols: list[str] | None = None) -> dict:
+        """The log records for NEW files — the one builder of per-file
+        records (existing files carry theirs through _publish). Returns
+        {kind: {file: record}}: `stats` and `row_counts` from one footer
+        open per file, plus `blooms`/`sums` when the table declares
+        those columns. Blooms and sums share ONE mergeSchema read of
+        the files: a producer may legally append files that OMIT a
+        committed column (_merged_schema allows it), and such a file
+        reads that column as NULL instead of crashing."""
+        stats, rows = self._collect_footer_stats(files)
+        new = {"stats": stats, "row_counts": rows}
+        if not (bloom_cols or sum_cols):
+            return new
+        src = (self.spark.read.option("mergeSchema", "true").parquet(*files)
+               if files else None)
+        if bloom_cols:
+            new["blooms"] = self._collect_blooms(src, files, bloom_cols,
+                                                 rows)
+        if sum_cols:
+            new["sums"] = self._collect_sums(src, files, sum_cols, rows)
+        return new
+
+    def _by_file(self, recs: dict, files: list[str], rows: dict,
+                 empty: dict, what: str) -> dict:
+        """Key a job's per-`input_file_name()` records back to the
+        entry's paths. A file absent from the job output is legitimate
+        only when its footer counted 0 rows (no batches, no groups) and
+        records `empty`; a row-bearing file missing here means its URI
+        did not normalize back to the entry path — refuse rather than
+        record a silently-wrong empty record."""
+        from urllib.parse import unquote, urlparse
+
+        by_path = {unquote(urlparse(u).path): r for u, r in recs.items()}
+        out = {}
+        for f in files:
+            got = by_path.get(os.path.abspath(f))
+            if got is None:
+                if rows[f] > 0:
+                    raise ValueError(
+                        f"lake table {self.path}: {what} could not match "
+                        f"{f!r} to a scanned file URI — path "
+                        f"normalization mismatch")
+                got = empty
+            out[f] = got
+        return out
+
+    def _collect_sums(self, src: DataFrame | None, files: list[str],
+                      sum_cols: list[str], rows: dict) -> dict:
         """Per-file DECIMAL(38,6)-exact sums of `sum_cols` — the one
         write-time aggregate parquet footers cannot provide. Unlike
         min/max (footer metadata, free), each file's sum costs one
         pass over the file at COMMIT time — pay once at write, answer
-        SUM/AVG forever from the log (stats()). Files already summed
-        in `prior` (shared byte-for-byte by a CoW rewrite or append)
-        carry their record verbatim; only genuinely new files are
-        scanned, in ONE Spark job grouped by input_file_name. Decimal
-        sums serialize as strings: exact, order-independent under any
-        partitioning, and engine-portable (same value the full-scan
-        SUM(CAST(col AS DECIMAL(38,6))) twin computes)."""
-        from urllib.parse import unquote, urlparse
-
+        SUM/AVG forever from the log (stats()). ONE Spark job over
+        `src` (the files' mergeSchema read) grouped by
+        input_file_name. Decimal sums serialize as strings: exact,
+        order-independent under any partitioning, and engine-portable
+        (same value the full-scan SUM(CAST(col AS DECIMAL(38,6))) twin
+        computes). A file whose rows read a column as NULL records
+        [None, 0] for it."""
         from pyspark.sql import functions as F
 
-        prior = prior or {}
-        out = {f: prior[f] for f in files if f in prior}
-        missing = [f for f in files if f not in prior]
-        if not missing:
-            return out
-        # mergeSchema: a producer may legally append files that OMIT a
-        # committed column (_merged_schema allows it) — such a file's
-        # rows read as NULL for that column and its partial records
-        # [None, 0], never a crash. A column absent from EVERY scanned
-        # file records [None, 0] for all of them.
-        src = self.spark.read.option("mergeSchema", "true").parquet(*missing)
+        if not files:
+            return {}
         present = [c for c in sum_cols if c in src.columns]
         if not present:
-            # none of the scanned files carry any sum column: every
-            # partial is a NULL sum over zero non-null values — no scan,
-            # and no file-URI matching to go wrong
-            out.update({f: {c: [None, 0] for c in sum_cols}
-                        for f in missing})
-            return out
+            # none of the files carry any sum column: every partial is
+            # a NULL sum over zero non-null values — no scan, and no
+            # file-URI matching to go wrong
+            return {f: {c: [None, 0] for c in sum_cols} for f in files}
         aggs = []
         for i, c in enumerate(present):
             aggs += [
                 F.sum(F.col(c).cast("decimal(38,6)")).alias(f"__s_{i}"),
                 F.count(F.col(c)).alias(f"__n_{i}"),
             ]
-        rows = []
-        if present:
-            rows = (
-                src.select(F.input_file_name().alias("__f"), *present)
-                .groupBy("__f").agg(*aggs).collect()
-            )
-        by_path = {}
-        for r in rows:
-            p = unquote(urlparse(r["__f"]).path)
+        recs = {}
+        for r in (src.select(F.input_file_name().alias("__f"), *present)
+                  .groupBy("__f").agg(*aggs).collect()):
             rec = {c: [None, 0] for c in sum_cols}
             for i, c in enumerate(present):
                 s, n = r[f"__s_{i}"], int(r[f"__n_{i}"])
@@ -811,34 +840,19 @@ class LakeTable:
                     # file, which would make stats() finite-but-wrong
                     raise ValueError(
                         f"lake table {self.path}: decimal(38,6) sum of "
-                        f"{c!r} overflowed in {p!r} — cannot record an "
-                        f"exact partial"
+                        f"{c!r} overflowed in {r['__f']!r} — cannot "
+                        f"record an exact partial"
                     )
                 # an all-NULL file's SUM is NULL and recorded as such:
                 # SQL SUM ignores nulls, so it contributes NOTHING; the
                 # non-null count rides along so stats() can also answer
                 # true AVG(col) = SUM/COUNT(col)
                 rec[c] = [str(s) if s is not None else None, n]
-            by_path[p] = rec
-        import pyarrow.parquet as pq
-
-        for f in missing:
-            got = by_path.get(os.path.abspath(f))
-            if got is None:
-                # absent from the groupBy output: legitimate ONLY for a
-                # 0-row file (SUM over zero rows is NULL). A row-bearing
-                # file missing here means the input_file_name URI did
-                # not normalize back to this entry path — refuse rather
-                # than record a silently-wrong null partial.
-                if pq.ParquetFile(f).metadata.num_rows > 0:
-                    raise ValueError(
-                        f"lake table {self.path}: _collect_sums could "
-                        f"not match {f!r} to a scanned file URI — "
-                        f"path normalization mismatch"
-                    )
-                got = {c: [None, 0] for c in sum_cols}
-            out[f] = got
-        return out
+            recs[r["__f"]] = rec
+        # a 0-row file has no group: SUM over zero rows is NULL
+        return self._by_file(recs, files, rows,
+                             {c: [None, 0] for c in sum_cols},
+                             "_collect_sums")
 
     # -- per-file bloom index (equality skipping) --------------------------
 
@@ -892,8 +906,8 @@ class LakeTable:
             x //= cls._BLOOM_BITS
         return out
 
-    def _collect_blooms(self, files: list[str],
-                        cols: list[str]) -> dict:
+    def _collect_blooms(self, src: DataFrame | None, files: list[str],
+                        cols: list[str], rows: dict) -> dict:
         """Per-file Bloom filters over `cols`: a 4 KiB bitset each,
         built from a COLUMN-PRUNED read of the just-written file (the
         write-time cost Delta pays for its file-level bloom index).
@@ -905,12 +919,12 @@ class LakeTable:
         bloom means 'might match' (conservative, never wrong).
 
         Built DISTRIBUTEDLY, like _collect_sums: one Spark job scans
-        the new files, each Arrow batch folds its values into a 4 KiB
-        partial bitset per (file, column) — mapInArrow so the values
-        hash from the SAME pyarrow `to_pylist` python objects the
-        probe-side _bloom_key normalizes — partials OR-merge per file
-        in an applyInPandas reduce, and only the merged 4 KiB bitsets
-        ever reach the driver. (The first cut read every file's full
+        `src` (the new files' mergeSchema read), each Arrow batch folds
+        its values into a 4 KiB partial bitset per (file, column) —
+        mapInArrow so the values hash from the SAME pyarrow `to_pylist`
+        python objects the probe-side _bloom_key normalizes — partials
+        OR-merge per file in an applyInPandas reduce, and only the
+        merged 4 KiB bitsets ever reach the driver. (The first cut read every file's full
         bloom-column contents on the driver, row-by-row in Python — at
         100 TB a bloom-indexed commit was driver-bound and O(rows).)
 
@@ -919,16 +933,11 @@ class LakeTable:
         contribute no bits, so it records an all-zero bitset — "no
         value matches", which is exactly right for rows whose column
         IS NULL (equality never matches NULL)."""
-        from urllib.parse import unquote, urlparse
-
-        import pyarrow.parquet as pq
-
         from pyspark.sql import functions as F
         from pyspark.sql import types as T
 
         if not files:
             return {}
-        src = self.spark.read.option("mergeSchema", "true").parquet(*files)
         present = [c for c in cols if c in src.columns]
         if not present:
             return {}
@@ -981,36 +990,20 @@ class LakeTable:
                                  "__c": [pdf["__c"].iloc[0]],
                                  "__bits": [acc.tobytes()]})
 
-        rows = (
+        merged = (
             src.select(F.input_file_name().alias("__f"), *present)
             .mapInArrow(batch_partials, partial_schema)
             .groupBy("__f", "__c").applyInPandas(or_merge, partial_schema)
             .collect()
         )
-        by_path: dict[str, dict[str, str]] = {}
-        for r in rows:
-            p = unquote(urlparse(r["__f"]).path)
-            by_path.setdefault(p, {})[r["__c"]] = bytes(r["__bits"]).hex()
-
-        out: dict[str, dict[str, str]] = {}
-        zero_hex = bytes(n_bytes).hex()
-        for f in files:
-            got = by_path.get(os.path.abspath(f))
-            if got is None:
-                # absent from the job output: legitimate ONLY for a
-                # 0-row file (no batches) — its all-zero bloom matches
-                # nothing, correctly. A row-bearing file missing here
-                # is a URI-normalization mismatch: refuse, like
-                # _collect_sums, rather than silently skip-index it.
-                if pq.ParquetFile(f).metadata.num_rows > 0:
-                    raise ValueError(
-                        f"lake table {self.path}: _collect_blooms could "
-                        f"not match {f!r} to a scanned file URI — "
-                        f"path normalization mismatch"
-                    )
-                got = {c: zero_hex for c in present}
-            out[f] = got
-        return out
+        recs: dict[str, dict[str, str]] = {}
+        for r in merged:
+            recs.setdefault(r["__f"], {})[r["__c"]] = \
+                bytes(r["__bits"]).hex()
+        # a 0-row file has no batches: its all-zero bloom matches nothing
+        return self._by_file(recs, files, rows,
+                             {c: bytes(n_bytes).hex() for c in present},
+                             "_collect_blooms")
 
     @classmethod
     def _bloom_may_contain(cls, hex_bits: str, value) -> bool:
@@ -1024,13 +1017,11 @@ class LakeTable:
 
     def _publish(self, files: list[str], op: str,
                  txn_id: str | None, version: int | None = None,
-                 schema=None, stats: dict | None = None,
-                 blooms: dict | None = None,
+                 schema=None, base: dict | None = None,
+                 new: dict | None = None,
                  bloom_cols: list[str] | None = None,
-                 row_counts: dict | None = None,
-                 deferred_deletes: list | None = None,
-                 sums: dict | None = None,
                  sum_cols: list[str] | None = None,
+                 deferred_deletes: list | None = None,
                  constraints: dict | None = None,
                  properties: dict | None = None,
                  column_map: dict | None = None,
@@ -1040,9 +1031,24 @@ class LakeTable:
         """Publish `files` as `version` (decided at TRANSACTION START —
         a transform computed against head N must not silently land on
         top of a competitor's N+1: that is a lost update, and the
-        exclusive create is what surfaces it as ConcurrentWriteError)."""
+        exclusive create is what surfaces it as ConcurrentWriteError).
+
+        Per-file records follow their file: for each kind (stats,
+        blooms, row_counts, sums) the entry holds `base`'s record for
+        every listed file plus the records in `new` (_index_files'
+        output for the files this commit wrote) — `base` is the entry
+        the file list came from. `bloom_cols`, `sum_cols` and
+        `deferred_deletes` default to `base`'s; [] clears. Blooms and
+        sums are kept only while their column list is non-empty."""
         if version is None:
             version = self._next_version()
+        base, new = base or {}, new or {}
+        if bloom_cols is None:
+            bloom_cols = base.get("bloom_cols")
+        if sum_cols is None:
+            sum_cols = base.get("sum_cols")
+        if deferred_deletes is None:
+            deferred_deletes = base.get("deferred_deletes")
         entry = {
             "version": version,
             "op": op,
@@ -1056,18 +1062,16 @@ class LakeTable:
             # from the log, not from an arbitrary parquet footer, and
             # time travel returns the schema that version actually had
             entry["schema"] = schema.json()
-        if stats is not None:
-            entry["stats"] = stats
-        if blooms is not None:
-            entry["blooms"] = blooms
+        for kind, kept in (("stats", True), ("blooms", bloom_cols),
+                           ("row_counts", True), ("sums", sum_cols)):
+            if kept and (kind in base or kind in new):
+                old = base.get(kind, {})
+                entry[kind] = {**{f: old[f] for f in files if f in old},
+                               **new.get(kind, {})}
         if bloom_cols:
             entry["bloom_cols"] = bloom_cols
-        if row_counts is not None:
-            entry["row_counts"] = row_counts
         if deferred_deletes:
             entry["deferred_deletes"] = deferred_deletes
-        if sums is not None:
-            entry["sums"] = sums
         if sum_cols:
             entry["sum_cols"] = sum_cols
         # TABLE-PROPERTY carry-forward (constraints, Delta
@@ -1223,14 +1227,16 @@ class LakeTable:
 
         `bloom_cols` attaches a per-file Bloom index over the listed
         columns (equality skipping for scan_point — see
-        _collect_blooms); appends inherit the table's bloom_cols when
-        not given, so incremental producers keep the index complete.
-
-        `sum_cols` records per-file decimal-exact sums of the listed
-        numeric columns (one write-time pass per new file — see
-        _collect_sums), which lets stats() answer SUM/AVG from the log
-        with zero files opened. Same table-property semantics as
-        bloom_cols: appends inherit, pass [] to clear.
+        _collect_blooms); `sum_cols` records per-file decimal-exact
+        sums of the listed numeric columns (_collect_sums), which lets
+        stats() answer SUM/AVG from the log with zero files opened.
+        Both are table properties: every commit inherits them when not
+        given, pass [] to clear. Records are built only for the files
+        a commit writes (_index_files); files it shares keep the
+        records they already carry. So a column first declared on an
+        append is indexed in the appended files only: scan_point keeps
+        the older files (no bloom = might match) and stats() leaves the
+        column's sum out until a full compact() rewrites every file.
 
         `retries` (append only): a blind append cannot conflict with a
         competitor's CONTENT — losing the version race just means the
@@ -1252,11 +1258,8 @@ class LakeTable:
             if done is not None:
                 return done
         new_files: list[str] | None = None
-        new_stats: dict = {}
-        new_rows: dict = {}
         validated_cons: dict = {}  # constraints this batch was gated on
-        bloom_cache: dict = {}  # bloom-cols tuple → blooms for new_files
-        sum_cache: dict = {}    # sum-cols tuple → sums for new_files
+        index_cache: dict = {}  # (bloom cols, sum cols) → new_files' records
         eff_cmap: dict = {}     # column map the files were written with
         eff_used: list = []
         map_active = False      # table carries mapping state at all
@@ -1350,7 +1353,6 @@ class LakeTable:
                 map_sig = head_sig
                 # data files land ONCE; retries only re-publish metadata
                 new_files = self._write_files(df, cmap=eff_cmap)
-                new_stats, new_rows = self._collect_footer_stats(new_files)
             elif head_cons != validated_cons:
                 # a competitor published between attempts and the head
                 # now carries constraints this batch was never checked
@@ -1374,33 +1376,17 @@ class LakeTable:
                     bc = [eff_cmap.get(c, c) for c in bloom_cols]
                 if sum_cols:
                     sc = [eff_cmap.get(c, c) for c in sum_cols]
-            blooms = None
-            if bc:
-                key = tuple(bc)
-                if key not in bloom_cache:
-                    bloom_cache[key] = self._collect_blooms(new_files, bc)
-                blooms = bloom_cache[key]
-            sums = None
-            if sc:
-                skey = tuple(sc)
-                if skey not in sum_cache:
-                    sum_cache[skey] = self._collect_sums(new_files, sc)
-                sums = sum_cache[skey]
-            files, stats, rows = new_files, new_stats, new_rows
-            if base_entry is not None:
-                files = base_entry["files"] + files
-                stats = {**base_entry.get("stats", {}), **stats}
-                rows = {**base_entry.get("row_counts", {}), **rows}
-                if bc:
-                    blooms = {**base_entry.get("blooms", {}), **blooms}
-                if sc:
-                    sums = {**base_entry.get("sums", {}), **sums}
+            key = (tuple(bc or ()), tuple(sc or ()))
+            if key not in index_cache:
+                index_cache[key] = self._index_files(new_files, bc, sc)
+            new = index_cache[key]
+            files = (new_files if base_entry is None
+                     else base_entry["files"] + new_files)
             try:
                 return self._publish(
                     files, op or mode, txn_id, version,
-                    schema=schema, stats=stats,
-                    blooms=blooms, bloom_cols=bc, row_counts=rows,
-                    sums=sums, sum_cols=sc,
+                    schema=schema, base=base_entry, new=new,
+                    bloom_cols=bc, sum_cols=sc,
                     # explicit (not carry-forward) once mapping state
                     # exists: an overwrite narrowing away every mapped
                     # column must CLEAR the map, and appends record
@@ -1412,7 +1398,8 @@ class LakeTable:
                     # footers — no extra scan), the reference's
                     # per-object record_count semantics
                     meta=(None if meta is None else {
-                        "record_count": sum(new_rows.values()), **meta}),
+                        "record_count": sum(new["row_counts"].values()),
+                        **meta}),
                     # pending merge-on-read deletes still cover the
                     # base files this append shares (scoped per-file,
                     # so the appended rows stay visible)
@@ -1644,7 +1631,9 @@ class LakeTable:
 
             pinned = T.StructType.fromJson(json.loads(entry["schema"]))
             if not files:
-                return self.spark.createDataFrame([], pinned)
+                # zero partitions: an empty side runs no tasks
+                return self.spark.createDataFrame(
+                    self.spark.sparkContext.emptyRDD(), pinned)
             cmap = self._entry_cmap(entry)
             if not cmap:
                 return self.spark.read.schema(pinned).parquet(*files)
@@ -1879,19 +1868,8 @@ class LakeTable:
         self._enforce_write_gates(source, base_entry, "merge")
         merged = merge_upsert(self.read(base), source, key)
         files = self._write_files(merged, cmap=self._entry_cmap(base_entry))
-        bloom_cols = base_entry.get("bloom_cols")
-        sum_cols = base_entry.get("sum_cols")
-        stats, rows = self._collect_footer_stats(files)
-        return self._publish(files, "merge", txn_id, base + 1,
-                             schema=merged.schema,
-                             stats=stats,
-                             blooms=(self._collect_blooms(files, bloom_cols)
-                                     if bloom_cols else None),
-                             bloom_cols=bloom_cols,
-                             sums=(self._collect_sums(files, sum_cols)
-                                   if sum_cols else None),
-                             sum_cols=sum_cols,
-                             row_counts=rows)
+        return self._publish_rewrite(base_entry, "merge", txn_id, base + 1,
+                                     [], files, schema=merged.schema)
 
     _MERGE_COVER_MAX_KEYS = 100_000  # driver-side source-key cap
 
@@ -2137,12 +2115,7 @@ class LakeTable:
             return self._publish(
                 entry["files"], "delete-defer", txn_id, base + 1,
                 schema=self._entry_schema(entry),
-                stats=entry.get("stats"),
-                blooms=entry.get("blooms"),
-                bloom_cols=entry.get("bloom_cols"),
-                sums=entry.get("sums"),
-                sum_cols=entry.get("sum_cols"),
-                row_counts=entry.get("row_counts"),
+                base=entry,
                 deferred_deletes=(entry.get("deferred_deletes", [])
                                   + [{"ranges": {c: list(b) for c, b
                                                  in ranges.items()},
@@ -2202,12 +2175,7 @@ class LakeTable:
             return self._publish(
                 entry["files"], "delete-defer", txn_id, base + 1,
                 schema=self._entry_schema(entry),
-                stats=entry.get("stats"),
-                blooms=entry.get("blooms"),
-                bloom_cols=entry.get("bloom_cols"),
-                sums=entry.get("sums"),
-                sum_cols=entry.get("sum_cols"),
-                row_counts=entry.get("row_counts"),
+                base=entry,
                 deferred_deletes=(entry.get("deferred_deletes", [])
                                   + [{"keys": {col: list(values)},
                                       # predicate scope: only the files
@@ -2284,12 +2252,16 @@ class LakeTable:
 
     def _publish_rewrite(self, entry: dict, op: str, txn_id: str | None,
                          version: int, untouched: list[str],
-                         new_files: list[str], schema=None) -> int:
-        """Publish a partial rewrite: `untouched` files carry their
-        stats/blooms forward verbatim, `new_files` get fresh stats (and
-        a fresh bloom when the table carries a bloom index); schema is
-        the entry's pinned schema unless `schema` overrides it (merge
-        schema evolution).
+                         new_files: list[str], schema=None,
+                         deferred_deletes: list | None = None) -> int:
+        """Publish `untouched + new_files` on top of `entry`: the
+        untouched files keep their log records (_publish's carry rule),
+        `new_files` are indexed under the table's bloom/sum columns. A
+        full rewrite (merge, compact, zorder) is the case `untouched=[]`.
+        Schema is the entry's pinned schema unless `schema` overrides it
+        (merge schema evolution); deferred deletes keep the predicates
+        still covering a published file unless `deferred_deletes`
+        overrides them.
 
         A publish that loses the head race (or any post-write failure)
         discards `new_files`: no entry will ever reference them, so
@@ -2298,7 +2270,7 @@ class LakeTable:
         try:
             return self._publish_rewrite_inner(
                 entry, op, txn_id, version, untouched, new_files,
-                schema)
+                schema, deferred_deletes)
         except BaseException:
             self._discard_files(new_files)
             raise
@@ -2307,16 +2279,8 @@ class LakeTable:
                                txn_id: str | None, version: int,
                                untouched: list[str],
                                new_files: list[str],
-                               schema=None) -> int:
+                               schema, deferred_deletes) -> int:
         files = untouched + new_files
-        untouched_set = set(untouched)
-        stats = {f: s for f, s in entry.get("stats", {}).items()
-                 if f in untouched_set}
-        rows = {f: n for f, n in entry.get("row_counts", {}).items()
-                if f in untouched_set}
-        new_stats, new_rows = self._collect_footer_stats(new_files)
-        stats.update(new_stats)
-        rows.update(new_rows)
         if schema is None:
             schema = self._entry_schema(entry)
         else:
@@ -2342,39 +2306,22 @@ class LakeTable:
                     f"recycle a retired/mapped physical name — re-add "
                     f"via commit(evolve=True), which assigns a fresh "
                     f"physical name")
-        bloom_cols = entry.get("bloom_cols")
-        blooms = None
-        if bloom_cols:
-            blooms = {f: b for f, b in entry.get("blooms", {}).items()
-                      if f in untouched_set}
-            blooms.update(self._collect_blooms(new_files, bloom_cols))
-        sum_cols = entry.get("sum_cols")
-        sums = None
-        if sum_cols:
-            # untouched files share bytes, so they share their sums;
-            # only the rewritten files are rescanned
-            sums = self._collect_sums(
-                files, sum_cols,
-                prior={f: s for f, s in entry.get("sums", {}).items()
-                       if f in untouched_set})
-        return self._publish(files, op, txn_id, version,
-                             schema=schema, stats=stats,
-                             blooms=blooms, bloom_cols=bloom_cols,
-                             sums=sums, sum_cols=sum_cols,
-                             row_counts=rows,
-                             deferred_deletes=self._live_deferred(
-                                 entry.get("deferred_deletes"), files))
+        if deferred_deletes is None:
+            deferred_deletes = self._live_deferred(
+                entry.get("deferred_deletes"), files)
+        new = self._index_files(new_files, entry.get("bloom_cols"),
+                                entry.get("sum_cols"))
+        return self._publish(files, op, txn_id, version, schema=schema,
+                             base=entry, new=new,
+                             deferred_deletes=deferred_deletes)
 
     @staticmethod
-    def _live_deferred(deferred, files) -> list | None:
+    def _live_deferred(deferred, files) -> list:
         """Deferred predicates still covering at least one published
         file; a predicate whose covered files were all rewritten is
         fully materialized and drops out of the entry."""
-        if not deferred:
-            return None
         fs = set(files)
-        live = [d for d in deferred if fs & set(d["files"])]
-        return live or None
+        return [d for d in deferred or [] if fs & set(d["files"])]
 
     def update(self, ranges: dict, set_exprs: dict,
                txn_id: str | None = None, defer: bool = False) -> int:
@@ -2495,36 +2442,15 @@ class LakeTable:
             changed = df.select(*proj)
             self._enforce_write_gates(changed, entry, "update")
             new_files = self._write_files(changed, cmap=self._entry_cmap(entry))
-        files = entry["files"] + new_files
-        new_stats, new_rows = self._collect_footer_stats(new_files)
-        stats = {**entry.get("stats", {}), **new_stats}
-        rows = {**entry.get("row_counts", {}), **new_rows}
-        bc = entry.get("bloom_cols")
-        blooms = None
-        if bc:
-            blooms = {**entry.get("blooms", {}),
-                      **self._collect_blooms(new_files, bc)}
-        sc = entry.get("sum_cols")
-        sums = None
-        if sc:
-            sums = self._collect_sums(files, sc,
-                                      prior=entry.get("sums", {}))
         deferred = (entry.get("deferred_deletes", [])
                     + [{"ranges": {c: list(b) for c, b in ranges.items()},
                         # snapshot scope: hides matches only in files
                         # that existed BEFORE this commit — the
                         # post-image files land outside it
                         "files": list(entry["files"])}])
-        try:
-            return self._publish(
-                files, "update-defer", txn_id, version,
-                schema=self._entry_schema(entry),
-                stats=stats, blooms=blooms, bloom_cols=bc,
-                sums=sums, sum_cols=sc, row_counts=rows,
-                deferred_deletes=deferred)
-        except BaseException:
-            self._discard_files(new_files)
-            raise
+        return self._publish_rewrite(entry, "update-defer", txn_id, version,
+                                     entry["files"], new_files,
+                                     deferred_deletes=deferred)
 
     # -- operators that commit through the log -----------------------------
 
@@ -2574,20 +2500,13 @@ class LakeTable:
                       - live_phys)
         return self._publish(entry["files"], "restore", txn_id, base + 1,
                              schema=self._entry_schema(entry),
-                             stats=entry.get("stats"),
-                             blooms=entry.get("blooms"),
-                             bloom_cols=entry.get("bloom_cols"),
-                             sums=entry.get("sums"),
-                             sum_cols=entry.get("sum_cols"),
-                             row_counts=entry.get("row_counts"),
+                             base=entry,
                              column_map=entry.get("column_map") or {},
                              generated=entry.get("generated") or {},
                              # an empty list CLEARS (not carries): a
                              # restore that re-lives every retired
                              # physical must not inherit the head's set
-                             phys_used=used,
-                             deferred_deletes=entry.get(
-                                 "deferred_deletes"))
+                             phys_used=used)
 
     def diff(self, v_old: int, v_new: int, key: str,
              content_cols: list[str]) -> DataFrame:
@@ -2665,21 +2584,8 @@ class LakeTable:
         n = max(1, math.ceil(total / target_bytes))
         compacted = self.read(base).repartition(n)
         files = self._write_files(compacted, cmap=self._entry_cmap(entry))
-        bloom_cols = entry.get("bloom_cols")
-        sum_cols = entry.get("sum_cols")
-        stats, rows = self._collect_footer_stats(files)
-        return self._publish(files, "compact", None, base + 1,
-                             schema=compacted.schema,
-                             stats=stats,
-                             blooms=(self._collect_blooms(files, bloom_cols)
-                                     if bloom_cols else None),
-                             bloom_cols=bloom_cols,
-                             # deferred deletes just materialized: the
-                             # rewritten files' sums must be recomputed
-                             sums=(self._collect_sums(files, sum_cols)
-                                   if sum_cols else None),
-                             sum_cols=sum_cols,
-                             row_counts=rows)
+        return self._publish_rewrite(entry, "compact", None, base + 1,
+                                     [], files, schema=compacted.schema)
 
     def optimize_zorder(self, cols: list[str], n_files: int = 16,
                         bits: int = 10, curve: str = "morton") -> int:
@@ -2720,19 +2626,8 @@ class LakeTable:
         base_entry = self._read_entry(base)
         files = self._write_files(
             clustered, cmap=self._entry_cmap(base_entry))
-        bloom_cols = base_entry.get("bloom_cols")
-        sum_cols = base_entry.get("sum_cols")
-        stats, rows = self._collect_footer_stats(files)
-        return self._publish(files, "zorder", None, base + 1,
-                             schema=clustered.schema,
-                             stats=stats,
-                             blooms=(self._collect_blooms(files, bloom_cols)
-                                     if bloom_cols else None),
-                             bloom_cols=bloom_cols,
-                             sums=(self._collect_sums(files, sum_cols)
-                                   if sum_cols else None),
-                             sum_cols=sum_cols,
-                             row_counts=rows)
+        return self._publish_rewrite(base_entry, "zorder", None, base + 1,
+                                     [], files, schema=clustered.schema)
 
     def commit_audited(self, df: DataFrame, mode: str = "overwrite",
                        check=None, txn_id: str | None = None,
@@ -3133,11 +3028,7 @@ class LakeTable:
         return self._publish(
             entry["files"], "set_constraint", txn_id, head + 1,
             schema=self._entry_schema(entry),
-            stats=entry.get("stats"), blooms=entry.get("blooms"),
-            bloom_cols=entry.get("bloom_cols"),
-            row_counts=entry.get("row_counts"),
-            sums=entry.get("sums"), sum_cols=entry.get("sum_cols"),
-            deferred_deletes=entry.get("deferred_deletes"),
+            base=entry,
             constraints=cons)
 
     def drop_constraint(self, name: str,
@@ -3162,11 +3053,7 @@ class LakeTable:
         return self._publish(
             entry["files"], "drop_constraint", txn_id, head + 1,
             schema=self._entry_schema(entry),
-            stats=entry.get("stats"), blooms=entry.get("blooms"),
-            bloom_cols=entry.get("bloom_cols"),
-            row_counts=entry.get("row_counts"),
-            sums=entry.get("sums"), sum_cols=entry.get("sum_cols"),
-            deferred_deletes=entry.get("deferred_deletes"),
+            base=entry,
             constraints=cons)
 
     def constraints(self) -> dict[str, str]:
@@ -3222,13 +3109,7 @@ class LakeTable:
         return self._publish(
             entry["files"], "set_generated", txn_id, head + 1,
             schema=self._entry_schema(entry),
-            stats=entry.get("stats"),
-            blooms=entry.get("blooms"),
-            bloom_cols=entry.get("bloom_cols"),
-            sums=entry.get("sums"),
-            sum_cols=entry.get("sum_cols"),
-            row_counts=entry.get("row_counts"),
-            deferred_deletes=entry.get("deferred_deletes"),
+            base=entry,
             generated=gen)
 
     def drop_generated(self, col: str, txn_id: str | None = None) -> int:
@@ -3251,13 +3132,7 @@ class LakeTable:
         return self._publish(
             entry["files"], "drop_generated", txn_id, head + 1,
             schema=self._entry_schema(entry),
-            stats=entry.get("stats"),
-            blooms=entry.get("blooms"),
-            bloom_cols=entry.get("bloom_cols"),
-            sums=entry.get("sums"),
-            sum_cols=entry.get("sum_cols"),
-            row_counts=entry.get("row_counts"),
-            deferred_deletes=entry.get("deferred_deletes"),
+            base=entry,
             generated=gen)  # {} clears
 
     def generated_columns(self) -> dict[str, str]:
@@ -3317,13 +3192,7 @@ class LakeTable:
                 return self._publish(
                     entry["files"], "set_property", txn_id, head + 1,
                     schema=self._entry_schema(entry),
-                    stats=entry.get("stats"),
-                    blooms=entry.get("blooms"),
-                    bloom_cols=entry.get("bloom_cols"),
-                    row_counts=entry.get("row_counts"),
-                    sums=entry.get("sums"),
-                    sum_cols=entry.get("sum_cols"),
-                    deferred_deletes=entry.get("deferred_deletes"),
+                    base=entry,
                     properties=props)
             except ConcurrentWriteError:
                 if attempt == retries:
@@ -3353,11 +3222,7 @@ class LakeTable:
         return self._publish(
             entry["files"], "drop_property", txn_id, head + 1,
             schema=self._entry_schema(entry),
-            stats=entry.get("stats"), blooms=entry.get("blooms"),
-            bloom_cols=entry.get("bloom_cols"),
-            row_counts=entry.get("row_counts"),
-            sums=entry.get("sums"), sum_cols=entry.get("sum_cols"),
-            deferred_deletes=entry.get("deferred_deletes"),
+            base=entry,
             properties=props)
 
     def table_properties(self) -> dict:
@@ -3464,13 +3329,7 @@ class LakeTable:
                 return self._publish(
                     entry["files"], "rename_column", txn_id, head + 1,
                     schema=new_schema,
-                    stats=entry.get("stats"),
-                    blooms=entry.get("blooms"),
-                    bloom_cols=entry.get("bloom_cols"),
-                    sums=entry.get("sums"),
-                    sum_cols=entry.get("sum_cols"),
-                    row_counts=entry.get("row_counts"),
-                    deferred_deletes=entry.get("deferred_deletes"),
+                    base=entry,
                     column_map=cmap,  # {} clears (rename back)
                     )
             except ConcurrentWriteError:
@@ -3528,29 +3387,19 @@ class LakeTable:
 
             new_schema = T.StructType(
                 [f for f in schema.fields if f.name != col])
-            bc = entry.get("bloom_cols") or []
-            new_bc = [c for c in bc if c != phys]
-            blooms = entry.get("blooms")
-            if blooms is not None and len(new_bc) != len(bc):
-                blooms = {f: {c: v for c, v in per.items() if c != phys}
-                          for f, per in blooms.items()}
-            sc = entry.get("sum_cols") or []
-            new_sc = [c for c in sc if c != phys]
-            sums = entry.get("sums")
-            if sums is not None and len(new_sc) != len(sc):
-                sums = {f: {c: v for c, v in per.items() if c != phys}
-                        for f, per in sums.items()}
+            # the dropped column's blooms and sums leave the entry
+            # (its min/max stats stay, unreachable from the schema)
+            pruned = {kind: {f: {c: v for c, v in per.items() if c != phys}
+                             for f, per in entry[kind].items()}
+                      for kind in ("blooms", "sums") if kind in entry}
             try:
                 return self._publish(
                     entry["files"], "drop_column", txn_id, head + 1,
-                    schema=new_schema,
-                    stats=entry.get("stats"),
-                    blooms=blooms if new_bc else None,
-                    bloom_cols=new_bc or None,
-                    sums=sums if new_sc else None,
-                    sum_cols=new_sc or None,
-                    row_counts=entry.get("row_counts"),
-                    deferred_deletes=entry.get("deferred_deletes"),
+                    schema=new_schema, base=entry, new=pruned,
+                    bloom_cols=[c for c in entry.get("bloom_cols") or []
+                                if c != phys],
+                    sum_cols=[c for c in entry.get("sum_cols") or []
+                              if c != phys],
                     column_map=cmap,  # {} clears
                     phys_used=used)
             except ConcurrentWriteError:
@@ -3643,13 +3492,7 @@ class LakeTable:
                 return self._publish(
                     entry["files"], "widen_column", txn_id, head + 1,
                     schema=new_schema,
-                    stats=entry.get("stats"),
-                    blooms=entry.get("blooms"),
-                    bloom_cols=entry.get("bloom_cols"),
-                    sums=entry.get("sums"),
-                    sum_cols=entry.get("sum_cols"),
-                    row_counts=entry.get("row_counts"),
-                    deferred_deletes=entry.get("deferred_deletes"))
+                    base=entry)
             except ConcurrentWriteError:
                 if attempt == retries:
                     raise
@@ -3708,13 +3551,7 @@ class LakeTable:
             list(entry["files"]), "clone",
             txn_id=f"clone:{self.path}@{v}", version=0,
             schema=schema,
-            stats=entry.get("stats"),
-            blooms=entry.get("blooms"),
-            bloom_cols=entry.get("bloom_cols"),
-            row_counts=entry.get("row_counts"),
-            sums=entry.get("sums"),
-            sum_cols=entry.get("sum_cols"),
-            deferred_deletes=entry.get("deferred_deletes"),
+            base=entry,
             constraints=entry.get("constraints"),
             properties=entry.get("properties"),
             # v0 has no prior to carry from — the source version's

@@ -3372,14 +3372,16 @@ def lakesum_index(spark, sf_dir: str) -> str:
         "/ COUNT(*) AS DOUBLE) AS avg_chars FROM documents"
     ),
     doc="LLM lake versioning: METADATA-ONLY SUM/AVG — the aggregate "
-        "parquet footers cannot provide, paid for once at commit time "
-        "(sum_cols per-file decimal sums, lakelog._collect_sums) and "
-        "answered forever from the log with zero files opened; "
+        "parquet footers cannot provide, paid for once when a file is "
+        "written (sum_cols per-file decimal sums built by "
+        "lakelog._index_files, then carried with the file by every "
+        "later commit) and answered forever from the log with zero "
+        "files opened; "
         "string-decimal partials added exactly driver-side, cast to "
         "double at the end, so the result hash-matches the full-scan "
         "decimal-SUM twin. Extends the stats() tier beyond "
         "COUNT/MIN/MAX; propagation across every commit kind is "
-        "pytest-pinned (LakeTable.stats)",
+        "pytest-pinned (test_file_records_follow_their_files)",
 )
 def q_lake_sum_agg(spark, sf_dir):
     from aws_data_pipeline_ads_spark.lakelog import LakeTable

@@ -197,7 +197,8 @@ def curation_ingest(docs_stream: DataFrame, out_path: str, seen_path: str,
             # disable dedup and append duplicates to the corpus.
             if "PATH_NOT_FOUND" not in str(e) and "UNABLE_TO_INFER_SCHEMA" not in str(e):
                 raise
-            seen = spark.createDataFrame([], "content_hash string")
+            seen = spark.createDataFrame(spark.sparkContext.emptyRDD(),
+                                         "content_hash string")
         flags = incremental_exact_dedup(ok, seen)
         kept = ok.join(flags.filter(SF.col("keep")), "doc_id").select(
             batch_df.columns + ["content_hash"]

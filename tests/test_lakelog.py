@@ -1294,6 +1294,159 @@ def test_sum_partial_producer_and_avg_and_hilbert_nulls(spark, tmp_path,
     assert sorted(r.a for r in th.read().collect()) == list(range(50))
 
 
+def _file_rows(lo, hi, spark):
+    return spark.createDataFrame(
+        [(k, k * 3 % 17, f"s{k % 11}", k % 5, k % 7, k * 2)
+         for k in range(lo, hi)],
+        "k long, v long, s string, w long, g int, d long")
+
+
+def test_file_records_follow_their_files(spark, tmp_path, monkeypatch):
+    """A file's log records (min/max stats, row count, bloom, decimal
+    sum) are built once, from one footer open, by the commit that
+    wrote the file, and then follow it unchanged through every op that
+    commits: each listed file's records equal those of the entry that
+    first listed it (a dropped column's bloom and sum excepted), no
+    entry holds a record for a file it does not list, and stats()
+    equals a full-scan aggregate whenever no delete is pending. The
+    sequence empties one file (a CoW delete of a whole appended file),
+    whose 0-row footer must not be reopened by the bloom/sum
+    collectors."""
+    import collections
+
+    import pyarrow.parquet as pq
+
+    opened: collections.Counter = collections.Counter()
+    real_pf = pq.ParquetFile
+
+    def counting_pf(path, *a, **kw):
+        opened[path] += 1
+        return real_pf(path, *a, **kw)
+
+    monkeypatch.setattr(pq, "ParquetFile", counting_pf)
+    kinds = ("stats", "row_counts", "blooms", "sums")
+    first: dict = {}        # file -> {kind: record} when first listed
+    dropped: set = set()    # physical names whose bloom/sum was dropped
+
+    def rows(lo, hi, wide=False):
+        df = _file_rows(lo, hi, spark)
+        return df.withColumn("g", F.col("g").cast("long")) if wide else df
+
+    def check(t, n_sums):
+        e = t._read_entry(t.current_version())
+        files = e["files"]
+        assert set(e["row_counts"]) == set(files)
+        assert set(e["sums"]) == set(files)
+        for kind in kinds:
+            assert set(e.get(kind, {})) <= set(files), kind
+        for f in files:
+            now = {k: e.get(k, {}).get(f) for k in kinds}
+            if f not in first:
+                first[f] = now
+                continue
+            want = dict(first[f])
+            for k in ("blooms", "sums"):
+                if want[k] is not None:
+                    want[k] = {c: r for c, r in want[k].items()
+                               if c not in dropped}
+            assert now == want, (e["op"], f)
+        if e.get("deferred_deletes"):
+            return
+        s, df = t.stats(), t.read()
+        assert s["rows"] == df.count()
+        for c in s["min"]:
+            assert (s["min"][c], s["max"][c]) == tuple(
+                df.agg(F.min(c), F.max(c)).first()), c
+        assert len(s["sum"]) == n_sums
+        for c, got in s["sum"].items():
+            assert got == df.agg(F.sum(F.col(c).cast("decimal(38,6)"))
+                                 .cast("double")).first()[0], c
+
+    t = LakeTable(spark, str(tmp_path / "tbl"))
+    t.commit(rows(0, 60).repartition(3, "k"), bloom_cols=["k", "w"],
+             sum_cols=["v", "w"])
+    check(t, 2)
+    t.commit(rows(100, 110).coalesce(1), "append")
+    check(t, 2)
+    ops = [
+        lambda: t.delete({"k": (100, 109)}),     # empties the appended file
+        lambda: t.merge(rows(5, 8).withColumn("v", F.lit(99).cast("long")),
+                        "k"),
+        lambda: t.merge_clauses(rows(60, 65).unionByName(rows(20, 22)),
+                                "k", matched_update={"v": "src_v + 1"}),
+        lambda: t.delete({"k": (0, 3)}),
+        lambda: t.delete({"k": (40, 45)}, defer=True),
+        lambda: t.delete_keys("k", [10, 11]),
+        lambda: t.delete_keys("k", [62, 63], defer=True),
+        lambda: t.update({"k": (20, 30)}, {"v": "v + 5"}),
+        lambda: t.update({"k": (30, 35)}, {"v": "v + 1"}, defer=True),
+        lambda: t.compact(target_bytes=1 << 30, incremental=True),
+        lambda: t.compact(target_bytes=1 << 30),
+        lambda: t.optimize_zorder(["k", "v"], n_files=3),
+        lambda: t.set_constraint("vpos", "v >= 0"),
+        lambda: t.drop_constraint("vpos"),
+        lambda: t.set_property("owner", "ads"),
+        lambda: t.drop_property("owner"),
+        lambda: t.set_generated_column("d", "k * 2"),
+        lambda: t.commit(rows(200, 205).drop("d"), "append"),
+        lambda: t.drop_generated("d"),
+        lambda: t.restore(3),
+        lambda: t.rename_column("w", "w2"),
+        lambda: t.widen_column("g", "long"),
+    ]
+    for op in ops:
+        op()
+        check(t, 2)
+    t.drop_column("w2")
+    dropped.add("w")
+    check(t, 1)
+    assert t._read_entry(t.current_version())["bloom_cols"] == ["k"]
+    t.commit(rows(300, 304, wide=True).drop("w"), "append")
+    check(t, 1)
+    c = t.clone(str(tmp_path / "clone"))
+    check(c, 1)
+    c.commit(rows(400, 403, wide=True).drop("w"), "append")
+    check(c, 1)
+    # every footer was opened exactly once: when its file was indexed
+    assert set(opened) == set(first)
+    assert set(opened.values()) == {1}, {
+        f: n for f, n in opened.items() if n > 1}
+
+
+def test_sum_cols_declared_on_append_wait_for_full_rewrite(spark, tmp_path):
+    """Records are built for new files only, so a sum column first
+    declared on an append over older files has sums in the appended
+    files alone: stats() leaves that column out — through a CoW delete
+    too, which never backfills the files it shares — and reports it
+    again, equal to the full scan, once a full compact() has rewritten
+    every file."""
+    t = LakeTable(spark, str(tmp_path / "tbl"))
+    t.commit(_file_rows(0, 40, spark).repartition(2, "k"))
+    t.commit(_file_rows(100, 110, spark), "append", sum_cols=["v"])
+    assert "v" not in t.stats()["sum"]
+    t.delete({"k": (100, 102)})
+    assert "v" not in t.stats()["sum"]
+    t.compact(target_bytes=1 << 30)
+    want = t.read().agg(F.sum(F.col("v").cast("decimal(38,6)"))
+                        .cast("double")).first()[0]
+    assert t.stats()["sum"] == {"v": want}
+
+
+def test_empty_reads_run_no_tasks(spark, tmp_path):
+    """An empty read — a version's empty file subset (an append
+    delta's old side) or a scan() whose stats prune every file — has
+    zero partitions, so it schedules no empty tasks, and keeps the
+    version's pinned schema."""
+    t = LakeTable(spark, str(tmp_path / "tbl"))
+    v = t.commit(_file_rows(0, 20, spark).repartition(2, "k"))
+    empty = t.read_version_files(v, [])
+    assert empty.rdd.getNumPartitions() == 0
+    assert empty.schema == t.read().schema
+    pruned = t.scan({"k": (1000, 2000)})
+    assert pruned.rdd.getNumPartitions() == 0
+    assert pruned.count() == 0
+
+
 def test_hadoop_fs_data_plane_maintenance_cycle(spark, sf_dir, tmp_path):
     """The maintenance ops that touch data files directly (compact's
     size binning, vacuum's deletes, restore's vacuumed-file guard,

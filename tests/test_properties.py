@@ -846,10 +846,13 @@ def _lake_model_rows(model):
 @given(seed=st.integers(0, 10_000))
 def test_lake_oplog_matches_model(spark, tmp_path_factory, seed):
     """Apply ~8 random ops (overwrite/append/CoW-delete/deferred-delete/
-    update/merge/compact/incremental-compact/restore) to a LakeTable
-    AND to a dict model {k: v}; after every op the table read must
-    equal the model, and at the end every historical version must
-    still read (time travel never breaks)."""
+    CoW and deferred delete_keys/update/merge/compact/incremental-
+    compact/zorder/restore/set_property/set_constraint) to a LakeTable
+    carrying a bloom index on k and decimal sums of v, AND to a dict
+    model {k: v}; after every op the table read and a scan_point probe
+    must equal the model, stats() must equal the model's aggregates
+    whenever no delete is pending, and at the end every historical
+    version must still read (time travel never breaks)."""
     import random
 
     from pyspark.sql import functions as F
@@ -870,20 +873,36 @@ def test_lake_oplog_matches_model(spark, tmp_path_factory, seed):
                 for _ in range(n)}
 
     model = fresh(8)
-    t.commit(mk_df(model))
+    t.commit(mk_df(model), bloom_cols=["k"], sum_cols=["v"])
     snapshots = {0: dict(model)}
     next_key = 100  # appended keys never repeat: the model is a dict,
     # so the table must stay duplicate-free by construction
 
     def check():
+        where = f"seed={seed} v={t.current_version()}"
         got = sorted((r.k, r.v) for r in t.read().collect())
-        assert got == _lake_model_rows(model), \
-            f"seed={seed} v={t.current_version()}"
+        assert got == _lake_model_rows(model), where
+        probe = (rng.choice(sorted(model)) if model and rng.random() < 0.7
+                 else rng.randrange(0, 130))
+        got = [(r.k, r.v) for r in t.scan_point({"k": probe}).collect()]
+        assert got == ([(probe, model[probe])] if probe in model
+                       else []), f"{where} probe={probe}"
+        if t._read_entry(t.current_version()).get("deferred_deletes"):
+            return
+        s = t.stats()
+        assert s["rows"] == len(model), where
+        assert s["min"] == ({"k": min(model), "v": min(model.values())}
+                            if model else {}), where
+        assert s["max"] == ({"k": max(model), "v": max(model.values())}
+                            if model else {}), where
+        assert s["sum"] == {"v": (float(sum(model.values()))
+                                  if model else None)}, where
 
     for _ in range(8):
         op = rng.choice(["overwrite", "append", "delete", "defer",
-                         "update", "merge", "compact", "inc_compact",
-                         "restore"])
+                         "keys", "keys_defer", "update", "merge",
+                         "compact", "inc_compact", "zorder", "restore",
+                         "property", "constraint"])
         if op == "overwrite":
             model = fresh(rng.randrange(1, 10))
             t.commit(mk_df(model))
@@ -900,6 +919,10 @@ def test_lake_oplog_matches_model(spark, tmp_path_factory, seed):
             t.delete({"k": (lo, hi)}, defer=(op == "defer"))
             model = {k: v for k, v in model.items()
                      if not (lo <= k <= hi)}
+        elif op in ("keys", "keys_defer"):
+            keys = rng.sample(range(0, 130), rng.randrange(1, 5))
+            t.delete_keys("k", keys, defer=(op == "keys_defer"))
+            model = {k: v for k, v in model.items() if k not in keys}
         elif op == "update":
             lo = rng.randrange(0, 60)
             hi = lo + rng.randrange(0, 30)
@@ -921,6 +944,12 @@ def test_lake_oplog_matches_model(spark, tmp_path_factory, seed):
             t.compact(target_bytes=1 << 20)
         elif op == "inc_compact":
             t.compact(target_bytes=1 << 20, incremental=True)
+        elif op == "zorder":
+            t.optimize_zorder(["k", "v"], n_files=2)
+        elif op == "property":
+            t.set_property("owner", rng.randrange(3))
+        elif op == "constraint":
+            t.set_constraint("v_nonneg", "v >= 0")
         elif op == "restore":
             v = rng.choice(sorted(snapshots))
             t.restore(v)
