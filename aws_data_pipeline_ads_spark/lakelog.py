@@ -2,10 +2,13 @@
 
 The unified transaction layer the manifest zone (pipeline/sink.py
 write_manifest — reference `config/config.json:15` manifest/ folder),
-atomic-swap compaction (operators/compaction.py), MERGE upsert
-(operators/upsert.py) and snapshot CDC (upsert.snapshot_diff) grow
-into at scale — the minimal form of what Delta Lake's `_delta_log` /
-Iceberg's metadata tree formalize, built from public first principles:
+atomic-swap compaction (operators/compaction.py), keyed upsert
+(operators/upsert.merge_upsert) and snapshot CDC (upsert.snapshot_diff)
+grow into at scale. Here MERGE (merge / merge_clauses) rewrites only
+the files that can hold a source key, and diff opens only the files
+two versions do not share. It is the minimal form of what Delta
+Lake's `_delta_log` / Iceberg's metadata tree formalize, built from
+public first principles:
 
 * **A commit is a FILE LIST, not a directory.** Every version is one
   JSON entry `_log/{version:08d}.json` recording the complete set of
@@ -1850,26 +1853,29 @@ class LakeTable:
 
     def merge(self, source: DataFrame, key: str,
               txn_id: str | None = None) -> int:
-        """MERGE INTO (update-else-insert by key) as a new commit —
-        operators/upsert.merge_upsert against the current snapshot,
-        published copy-on-write (the old version stays readable)."""
-        from aws_data_pipeline_ads_spark.operators.upsert import merge_upsert
+        """MERGE INTO by key, whole-row: WHEN MATCHED THEN UPDATE SET *
+        WHEN NOT MATCHED THEN INSERT * — the update-all/insert-all case
+        of merge_clauses, so it shares that method's cover-scoped
+        rewrite (only files that can hold a source key are rewritten),
+        its refusal of a duplicate non-NULL source key and its gates.
+        `source` must carry exactly the table's columns, in order. On
+        an empty table the source commits as version 0."""
+        from pyspark.sql import functions as F
 
-        if txn_id is not None:
-            done = self._txn_version(txn_id)
-            if done is not None:
-                return done
         base = self.current_version()
-        if base is None:
-            return self.commit(source, "overwrite", txn_id, op="merge")
-        base_entry = self._read_entry(base)
-        # every row merge introduces comes from `source` (matched rows
-        # are replaced wholesale) — gate those, never rescan the table
-        self._enforce_write_gates(source, base_entry, "merge")
-        merged = merge_upsert(self.read(base), source, key)
-        files = self._write_files(merged, cmap=self._entry_cmap(base_entry))
-        return self._publish_rewrite(base_entry, "merge", txn_id, base + 1,
-                                     [], files, schema=merged.schema)
+        if base is not None:
+            cols = (self._entry_schema(self._read_entry(base))
+                    or self.read(base).schema).names
+            # a replay of a merge committed before the table's schema
+            # moved still answers from the log (in merge_clauses)
+            if cols != source.columns and (
+                    txn_id is None or self._txn_version(txn_id) is None):
+                raise ValueError(f"schema mismatch: target {cols} vs "
+                                 f"source {source.columns}")
+        return self.merge_clauses(
+            source, key, insert=True, txn_id=txn_id,
+            matched_update={c: F.col(f"src_{c}") for c in source.columns
+                            if c != key})
 
     _MERGE_COVER_MAX_KEYS = 100_000  # driver-side source-key cap
 
@@ -1882,8 +1888,8 @@ class LakeTable:
                       evolve: bool = False) -> int:
         """Full Delta-style MERGE in one commit: WHEN MATCHED [AND
         cond] THEN UPDATE SET … / DELETE, WHEN NOT MATCHED THEN
-        INSERT — the update/takedown/backfill trifecta `merge()`'s
-        update-else-insert cannot express.
+        INSERT — the update/takedown/backfill trifecta; `merge()` is
+        its update-all/insert-all case.
 
         `matched_update` maps target column → Column / SQL expression;
         `matched_delete` is a SQL boolean. Both evaluate against the
@@ -1904,9 +1910,10 @@ class LakeTable:
         whole table) tighten through the commit-log stats + Bloom
         index to the files that can hold ANY source key. Untouched
         files are shared byte-for-byte; only covering files are read,
-        left-joined against the broadcast source, and rewritten —
-        bounded rewrite on a key-clustered table at any size, where
-        merge()'s whole-snapshot rewrite is the unclustered fallback.
+        left-joined against the source, and rewritten — bounded
+        rewrite on a key-clustered table at any size. The source is
+        broadcast only under the key cap; a larger source leaves the
+        join strategy to the planner.
         Standing CHECK constraints gate every row the merge introduces
         (updated projections + inserts, both delta/cover-scoped).
 
@@ -1992,7 +1999,8 @@ class LakeTable:
         skeys = [r[0] for r in source.select(key).where(
             F.col(key).isNotNull())
             .limit(self._MERGE_COVER_MAX_KEYS + 1).collect()]
-        if len(skeys) > self._MERGE_COVER_MAX_KEYS:
+        over_cap = len(skeys) > self._MERGE_COVER_MAX_KEYS
+        if over_cap:
             cover = list(entry["files"])     # over cap: conservative
         else:
             cover = self._keyset_cover(entry, key, skeys)
@@ -2011,7 +2019,8 @@ class LakeTable:
         gate_parts: list[DataFrame] = []
         if cover:
             aff = (self._read_files(entry, cover)
-                   .join(F.broadcast(src), key, "left"))
+                   .join(src if over_cap else F.broadcast(src), key,
+                         "left"))
             sel = []
             for c in out_cols:
                 # an evolved (added) column does not exist in the
@@ -2511,14 +2520,22 @@ class LakeTable:
     def diff(self, v_old: int, v_new: int, key: str,
              content_cols: list[str]) -> DataFrame:
         """Snapshot CDC between two COMMITTED versions — the change a
-        rebuild published, straight from the log (upsert.snapshot_diff
-        over the two file-list reads; the only shuffle carries
-        (key, md5) pairs)."""
+        rebuild published, straight from the log: upsert.snapshot_diff
+        over the two versions reduced to the files they do not share
+        (lakemv._version_delta_sides), so an append's diff opens only
+        the appended files. The only shuffle carries (key, md5) pairs.
+
+        `key` must be unique per snapshot (NULL keys are exempt), the
+        contract the signed view delta also states: a file both
+        versions share then holds no key that also sits in a differing
+        file, so its rows are unchanged and are never read. A NULL-keyed
+        row has no identity across versions: one in a rewritten file is
+        reported removed and added, one in a shared file not at all."""
+        from aws_data_pipeline_ads_spark.lakemv import _version_delta_sides
         from aws_data_pipeline_ads_spark.operators.upsert import snapshot_diff
 
-        return snapshot_diff(
-            self.read(v_old), self.read(v_new), key, content_cols
-        )
+        old, new = _version_delta_sides(self, v_old, v_new)
+        return snapshot_diff(old, new, key, content_cols)
 
     def changes(self, v_from: int, v_to: int, key: str,
                 content_cols: list[str]) -> DataFrame:
@@ -2527,8 +2544,9 @@ class LakeTable:
         the version that introduced it — the 'give me everything since
         version N' contract an incremental consumer (downstream dedup,
         index refresh, replication) reads instead of re-diffing full
-        snapshots. Each step reduces to (key, md5) before its only
-        shuffle, same as diff()."""
+        snapshots. Each step is one diff(): it opens only the files
+        the two versions do not share, and reduces to (key, md5)
+        before its only shuffle."""
         from pyspark.sql import functions as F
 
         if not v_from < v_to:
@@ -3732,9 +3750,9 @@ def lake_upsert_sink(stream_df: DataFrame, table: LakeTable,
     txn_id="{query_id}:stream-batch-{bid}", so a crash replay of a
     batch is a no-op (the log answers with the original version) while
     a second producer's identically-numbered batches still commit
-    (per-query scoping, see _run_scoped_sink) — exactly-once without
-    rewriting the whole snapshot dir per batch (contrast
-    upsert.streaming_upsert_sink's swap)."""
+    (per-query scoping, see _run_scoped_sink). A batch rewrites only
+    the files that can hold its keys (merge()), and must be unique on
+    `key`: a duplicate non-NULL key fails the batch."""
     _run_scoped_sink(
         stream_df, checkpoint_dir,
         lambda batch, bid, aid: table.merge(

@@ -13,21 +13,19 @@ broadcast), so the target never reshuffles twice. With a real table
 format (Delta/Iceberg) this becomes engine MERGE; the semantics pinned
 here (and by the oracle twin q_merge_upsert) are identical.
 
-`streaming_upsert_sink` runs the same merge per micro-batch via
-foreachBatch — the standard Structured Streaming upsert pattern:
-checkpointing makes the batch ids exactly-once, and each batch rewrites
-the keyed snapshot transactionally (write-new-then-swap).
+The versioned form is lakelog's LakeTable.merge: the same semantics
+committed through the log, rewriting only the files that can hold a
+source key; lakelog.lake_upsert_sink runs it per micro-batch.
 """
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
 def merge_upsert(target: DataFrame, source: DataFrame,
-                 key: str, broadcast_source: bool = True) -> DataFrame:
+                 key: str) -> DataFrame:
     """Update-else-insert `source` rows into `target` by `key`.
 
     Whole-row semantics (matched rows are replaced by the source row);
@@ -38,48 +36,8 @@ def merge_upsert(target: DataFrame, source: DataFrame,
         raise ValueError(
             f"schema mismatch: target {target.columns} vs source {source.columns}"
         )
-    probe = source.select(key)
-    if broadcast_source:
-        probe = F.broadcast(probe)
-    kept = target.join(probe, key, "left_anti")
+    kept = target.join(F.broadcast(source.select(key)), key, "left_anti")
     return kept.unionByName(source)
-
-
-def streaming_upsert_sink(stream_df: DataFrame, target_path: str,
-                          checkpoint_dir: str, key: str) -> None:
-    """Maintain a keyed parquet snapshot from a stream of change rows.
-
-    Each micro-batch merges into the current snapshot and atomically
-    replaces it (write to a versioned directory, then overwrite the
-    live one — parquet has no transaction log, so the swap IS the
-    commit point). Trigger.AvailableNow drains and stops, matching the
-    reference's daily-batch cadence.
-    """
-    spark = stream_df.sparkSession
-
-    def _merge(batch: DataFrame, batch_id: int) -> None:
-        # ONLY a missing target means "first batch": any other read
-        # failure must fail the batch, not replace the whole snapshot
-        try:
-            merged = merge_upsert(spark.read.parquet(target_path), batch, key)
-        except AnalysisException as e:
-            if e.getCondition() != "PATH_NOT_FOUND":
-                raise
-            merged = batch
-        staged = f"{target_path}__staged_{batch_id}"
-        merged.write.mode("overwrite").parquet(staged)
-        # re-read the staged copy and overwrite the live path: parquet
-        # reads are lazy, so writing directly over target_path would
-        # read-while-overwriting the same files.
-        spark.read.parquet(staged).write.mode("overwrite").parquet(target_path)
-
-    q = (
-        stream_df.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
 
 
 def snapshot_diff(old: DataFrame, new: DataFrame, key: str,
@@ -98,6 +56,10 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key: str,
     join, so the full-outer join — the only shuffle — carries 16-byte
     hashes, never document bodies; at 100 TB the exchange is the key
     space, not the corpus. Output: key, change, old_hash, new_hash.
+
+    `key` must be unique on each side. NULL keys are exempt: a
+    NULL-keyed row never matches, so each is reported on its own, as
+    `removed` from `old` or `added` to `new`.
     """
     content = F.md5(F.concat_ws(
         "\x1f", *[F.coalesce(F.col(c).cast("string"), F.lit("")) for c in content_cols]
@@ -105,9 +67,12 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key: str,
     o = old.select(F.col(key).alias("__ok"), content.alias("old_hash"))
     n = new.select(F.col(key).alias("__nk"), content.alias("new_hash"))
     j = o.join(n, F.col("__ok") == F.col("__nk"), "full_outer")
+    # a present row's hash is never NULL (md5 over coalesced strings),
+    # so a NULL hash marks the side the row is absent from; the key
+    # cannot, as a NULL-keyed row never joins and both keys are NULL
     change = (
-        F.when(F.col("__ok").isNull(), F.lit("added"))
-        .when(F.col("__nk").isNull(), F.lit("removed"))
+        F.when(F.col("old_hash").isNull(), F.lit("added"))
+        .when(F.col("new_hash").isNull(), F.lit("removed"))
         .when(F.col("old_hash") != F.col("new_hash"), F.lit("changed"))
     )
     return (

@@ -1,11 +1,12 @@
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pytest
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aws_data_pipeline_ads_spark.catalog import TABLES
 from aws_data_pipeline_ads_spark.session import get_session

@@ -11,13 +11,14 @@ from __future__ import annotations
 
 import datetime as dt
 import json
+import os
 
 import pytest
 
 from aws_data_pipeline_ads_spark import deploy
 from tests.test_pipeline import AS_OF, POSTS, PRODUCTS, USERS_WRAPPED, fake_http
 
-PKG = "/root/repo/aws_data_pipeline_ads_spark"
+PKG = os.path.dirname(os.path.abspath(deploy.__file__))
 
 
 def test_build_package_is_deterministic(tmp_path):

@@ -154,6 +154,141 @@ def test_merge_and_diff_through_log(spark, sf_dir, tmp_path, mk_table):
     assert set(got) == chg_ids  # nothing else moved
 
 
+@pytest.mark.parametrize("cap", [None, 2])
+def test_merge_matches_merge_upsert_reference(spark, tmp_path, monkeypatch,
+                                              cap):
+    """Two arms, one answer: LakeTable.merge reads back equal to
+    upsert.merge_upsert over the prior snapshot, on seeded random
+    targets (range-clustered and hash-partitioned, with and without a
+    bloom index, holding NULL keys and a pending deferred delete) and
+    random sources (updates, inserts, NULL keys). With the source-key
+    cap at 2 every source is over it: the cover is the whole table and
+    no join of the merge is broadcast. Under the default cap the
+    source join carries the broadcast hint (the planner's own size
+    rule is off here, so only a hint can broadcast)."""
+    import itertools
+    import random
+    from collections import Counter
+
+    from aws_data_pipeline_ads_spark.operators.upsert import merge_upsert
+
+    if cap is not None:
+        monkeypatch.setattr(LakeTable, "_MERGE_COVER_MAX_KEYS", cap)
+    plans: list[str] = []
+    write = LakeTable._write_files
+
+    def spy(self, df, cmap=None):
+        plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return write(self, df, cmap=cmap)
+
+    monkeypatch.setattr(LakeTable, "_write_files", spy)
+    schema = "k long, v long, s string"
+    conf = "spark.sql.autoBroadcastJoinThreshold"
+    prev = spark.conf.get(conf)
+    spark.conf.set(conf, "-1")
+    try:
+        for i, (layout, blooms) in enumerate(itertools.product(
+                ["range", "hash"], [None, ["k"]])):
+            rng = random.Random(1000 + i)
+            keys = rng.sample(range(200), 60)
+            rows = ([(k, rng.randrange(1000), f"s{k}") for k in keys]
+                    + [(None, rng.randrange(1000), "tnull")
+                       for _ in range(3)])
+            df = spark.createDataFrame(rows, schema)
+            df = (df.repartitionByRange(4, "k") if layout == "range"
+                  else df.repartition(4, "k"))
+            t = LakeTable(spark, str(tmp_path / f"t{i}"))
+            t.commit(df, bloom_cols=blooms)
+            lo = rng.randrange(200)
+            t.delete({"k": (lo, lo + 30)}, defer=True)
+            v = t.current_version()
+            src_keys = (rng.sample(keys, 5)
+                        + rng.sample(range(200, 300), 3))
+            src = spark.createDataFrame(
+                [(k, rng.randrange(1000), "new") for k in src_keys]
+                + [(None, -1, "snull"), (None, -2, "snull")], schema)
+            want = Counter(map(tuple, merge_upsert(t.read(v), src, "k")
+                               .collect()))
+            plans.clear()
+            assert t.merge(src, "k") == v + 1
+            assert Counter(map(tuple, t.read().collect())) == want, \
+                (layout, blooms)
+            assert plans
+            if cap is None:
+                assert any("BroadcastHashJoin" in p for p in plans)
+            else:
+                assert not any("Broadcast" in p for p in plans), plans
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def _range_table(spark, t, n_files: int = 8):
+    """`t` committed as 100·n_files rows (k, v=2k) range-clustered on k
+    into n_files files; returns the entry's file list."""
+    t.commit(spark.range(0, 100 * n_files)
+             .select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
+             .repartitionByRange(n_files, "k"))
+    files = _entry(t, t.current_version())["files"]
+    assert len(files) == n_files
+    return files
+
+
+def test_merge_shares_untouched_files(spark, tmp_path, mk_table):
+    """A merge rewrites only the files that can hold a source key: one
+    update and one insert into an 8-file range-clustered table leave
+    the other files shared with the prior version."""
+    t = mk_table(str(tmp_path / "tbl"))
+    before = _range_table(spark, t)
+    src = spark.createDataFrame([(5, -1), (900, -2)], "k long, v long")
+    assert t.merge(src, "k") == 1
+    assert len(set(before) & set(_entry(t, 1)["files"])) >= 6
+    want = {(k, 2 * k) for k in range(800)} - {(5, 10)} | {(5, -1),
+                                                          (900, -2)}
+    assert set(_rows(t.read())) == want and t.read().count() == 801
+
+
+def test_merge_refuses_duplicate_source_key(spark, tmp_path, mk_table):
+    """A source holding one non-NULL key twice is refused (Delta's
+    multiple-matches error), not stored as two rows; the head stays."""
+    t = mk_table(str(tmp_path / "tbl"))
+    _range_table(spark, t, n_files=2)
+    src = spark.createDataFrame([(5, 1), (5, 2), (None, 3), (None, 4)],
+                                "k long, v long")
+    with pytest.raises(ValueError, match="duplicate key 5"):
+        t.merge(src, "k")
+    assert t.current_version() == 0
+
+
+def test_diff_classifies_null_keyed_rows(spark, tmp_path, mk_table):
+    """A NULL-keyed row never matches across versions: an unchanged
+    one is reported removed and added, a dropped one removed — never
+    all three as `added`."""
+    from collections import Counter
+
+    t = mk_table(str(tmp_path / "tbl"))
+    schema = "k long, s string"
+    t.commit(spark.createDataFrame([(1, "x"), (None, "a"), (None, "b")],
+                                   schema))
+    t.commit(spark.createDataFrame([(1, "x"), (None, "a")], schema))
+    got = Counter((r.k, r.change)
+                  for r in t.diff(0, 1, "k", ["s"]).collect())
+    assert got == Counter({(None, "removed"): 2, (None, "added"): 1})
+
+
+def test_diff_opens_only_unshared_files(spark, tmp_path, mk_table):
+    """diff() reads only the files the two versions do not share: a
+    one-row append's diff scans the appended file(s) alone."""
+    t = mk_table(str(tmp_path / "tbl"))
+    before = _range_table(spark, t)
+    t.commit(spark.createDataFrame([(5000, 1)], "k long, v long"),
+             "append")
+    appended = set(_entry(t, 1)["files"]) - set(before)
+    d = t.diff(0, 1, "k", ["v"])
+    assert ({os.path.basename(f) for f in d.inputFiles()}
+            == {os.path.basename(f) for f in appended})
+    assert [(r.k, r.change) for r in d.collect()] == [(5000, "added")]
+
+
 def test_compact_preserves_content_and_history(spark, sf_dir, tmp_path, mk_table):
     """Compaction is just another commit: fewer files, identical rows,
     and the fragmented prior version still reads (no swap gap)."""

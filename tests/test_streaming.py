@@ -216,57 +216,31 @@ def test_stream_stream_attribution_matches_batch(spark, sf_dir, ev_stream, tmp_p
     assert got == batch and len(batch) > 0
 
 
-def test_streaming_upsert_maintains_keyed_snapshot(spark, sf_dir, tmp_path):
-    """foreachBatch upsert: draining the events stream through
-    latest-wins dedup per batch leaves a snapshot keyed by event_id that
-    equals the batch-computed table; a second drain with the same
-    checkpoint changes nothing (exactly-once)."""
-    from pyspark.sql import functions as F
+def test_lake_upsert_sink_maintains_keyed_snapshot(spark, sf_dir, tmp_path):
+    """foreachBatch upsert through the commit log: draining the events
+    stream leaves a table keyed by event_id that holds exactly the
+    batch table's distinct keys; a second drain with the same
+    checkpoint commits nothing (exactly-once)."""
+    from aws_data_pipeline_ads_spark.lakelog import LakeTable, lake_upsert_sink
 
-    from aws_data_pipeline_ads_spark.operators.upsert import streaming_upsert_sink
-
-    target = str(tmp_path / "snapshot")
+    t = LakeTable(spark, str(tmp_path / "tbl"))
     ck = str(tmp_path / "ck_upsert")
-    ev = streaming.events_stream(spark, sf_dir).select(
-        "event_id", "event_type", "value"
-    )
-    streaming_upsert_sink(ev, target, ck, key="event_id")
-    snap1 = spark.read.parquet(target)
-    batch = (
-        spark.read.parquet(f"{sf_dir}/events.parquet")
-        .select("event_id", "event_type", "value")
-    )
-    assert snap1.count() == batch.select("event_id").distinct().count()
-    # rerun: checkpoint replays nothing, snapshot unchanged
-    streaming_upsert_sink(
-        streaming.events_stream(spark, sf_dir).select(
-            "event_id", "event_type", "value"
-        ),
-        target, ck, key="event_id",
-    )
-    assert spark.read.parquet(target).count() == snap1.count()
 
+    def drain():
+        lake_upsert_sink(
+            streaming.events_stream(spark, sf_dir).select(
+                "event_id", "event_type", "value"),
+            t, ck, "event_id")
 
-def test_streaming_upsert_refuses_unreadable_target(spark, sf_dir, tmp_path):
-    """Only a MISSING target is a first batch: a target that exists but
-    is not parquet fails the micro-batch and is left as it was, instead
-    of being replaced by the batch alone."""
-    from pyspark.errors import StreamingQueryException
-
-    from aws_data_pipeline_ads_spark.operators.upsert import streaming_upsert_sink
-
-    target = tmp_path / "snapshot"
-    target.mkdir()
-    junk = target / "part-00000.parquet"
-    junk.write_bytes(b"not a parquet file\n")
-    ev = streaming.events_stream(spark, sf_dir).select(
-        "event_id", "event_type", "value"
-    )
-    with pytest.raises(StreamingQueryException):
-        streaming_upsert_sink(ev, str(target), str(tmp_path / "ck"),
-                              key="event_id")
-    assert [p.name for p in target.iterdir()] == [junk.name]
-    assert junk.read_bytes() == b"not a parquet file\n"
+    drain()
+    keys = [r[0] for r in t.read().select("event_id").collect()]
+    batch = spark.read.parquet(f"{sf_dir}/events.parquet")
+    assert sorted(keys) == sorted(
+        r[0] for r in batch.select("event_id").distinct().collect())
+    head = t.current_version()
+    drain()
+    assert t.current_version() == head
+    assert t.read().count() == len(keys)
 
 
 def test_streaming_funnel_matches_batch(spark, sf_dir, ev_stream, tmp_path):

@@ -32,10 +32,11 @@ import os
 # committed sweep is ORACLE_SF01_r13.txt).
 SF01 = os.environ.get("SPARK_GRAFT_TAIL_SF", "/root/testdata/sf0.01")
 SAMPLE = 12
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _round_no() -> int:
-    return len(glob.glob("/root/repo/CORRECTNESS_r*.json"))
+    return len(glob.glob(os.path.join(_ROOT, "CORRECTNESS_r*.json")))
 
 
 def _sample() -> list[str]:

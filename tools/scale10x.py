@@ -1038,9 +1038,9 @@ def main() -> None:
         f"{api_rows['merge'][1][2]}/{api_rows['merge'][1][3]} |",
         "",
         f"Factor **{(api_rows['merge'][1][1] / api_rows['merge'][0][1] if api_rows['merge'][0][1] else 0):.1f}×**; "
-        "rewritten-file count stays the key cover at both scales — "
-        "merge() 's whole-snapshot rewrite is the unclustered "
-        "fallback, this is the clustered fast path.",
+        "rewritten-file count stays the key cover at both scales; "
+        "merge() is the update-all/insert-all case of the same "
+        "cover-scoped rewrite.",
         "",
         "### commit_expect: the expectations split is batch-sized",
         "",
